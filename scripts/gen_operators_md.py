@@ -56,21 +56,19 @@ def main() -> int:
         if not rows:
             continue
         seen.update(n for n, _ in rows)
-        lines += [f"## {title}", "", "| query | oracle | bench | doc |", "|---|---|---|---|"]
+        lines += [f"## {title}", "", "| query | oracle | doc |", "|---|---|---|"]
         for n, q in sorted(rows):
             doc = " ".join(q.doc.split())
             lines.append(
-                f"| `{n}` | {'✓' if q.oracle else 'rows-only'} | "
-                f"{'✓' if q.bench else ''} | {doc} |"
+                f"| `{n}` | {'✓' if q.oracle else 'rows-only'} | {doc} |"
             )
         lines.append("")
     rest = [(n, q) for n, q in CATALOG.items() if n not in seen]
     if rest:
-        lines += ["## Other", "", "| query | oracle | bench | doc |", "|---|---|---|---|"]
+        lines += ["## Other", "", "| query | oracle | doc |", "|---|---|---|"]
         for n, q in sorted(rest):
             lines.append(
-                f"| `{n}` | {'✓' if q.oracle else 'rows-only'} | "
-                f"{'✓' if q.bench else ''} | {' '.join(q.doc.split())} |"
+                f"| `{n}` | {'✓' if q.oracle else 'rows-only'} | {' '.join(q.doc.split())} |"
             )
         lines.append("")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md")

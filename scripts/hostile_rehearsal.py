@@ -3,12 +3,12 @@
 
 The driver supplies its OWN SparkSession (its own timezone, shuffle
 parallelism, no engine defaults) and compares the first ~50 entries of
-``queries()`` against ``oracle_sql()`` on DuckDB at sf0.01. This script
-reproduces that as faithfully as possible: a session built with a
-non-UTC timezone and awkward shuffle.partitions, then compare_query over
-the first N catalog entries — any query that relies on an engine-built
-session instead of pinning what it needs fails HERE instead of in the
-driver run.
+``queries()`` (registration order) against ``oracle_sql()`` on DuckDB at
+sf0.01. This script reproduces that as faithfully as possible: a session
+built with a non-UTC timezone and awkward shuffle.partitions, then
+compare_query over the first N catalog entries — any query that relies
+on an engine-built session instead of pinning what it needs fails HERE
+instead of in the driver run.
 
 Usage: python scripts/hostile_rehearsal.py [sf_dir] [first_n]
 """

@@ -24,7 +24,7 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tbmr-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("tbmr-tests")
     yield s
 
 

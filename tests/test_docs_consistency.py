@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import re
 
 from thread_based_map_reduce_spark.plans.catalog import CATALOG, queries
@@ -27,3 +28,22 @@ def test_operators_md_fresh():
     assert m and int(m.group(1)) == len(CATALOG), (
         "OPERATORS.md is stale — run scripts/gen_operators_md.py"
     )
+
+
+def test_package_env_vars_are_documented():
+    # The package reads exactly these two knobs; README.md names each.
+    pkg = os.path.join(os.path.dirname(__file__), "..", "thread_based_map_reduce_spark")
+    read = re.compile(
+        r"""(?:environ(?:\.get|\.setdefault)?\s*[(\[]\s*|getenv\(\s*)["']([A-Z][A-Z0-9_]*)["']"""
+        r"""|["']([A-Z][A-Z0-9_]*)["']\s+in\s+os\.environ"""
+    )
+    found = set()
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f)) as fh:
+                    found |= {a or b for a, b in read.findall(fh.read())}
+    assert found == {"SPARK_GRAFT_CPUS", "TBMR_DRIVER_MEM"}, sorted(found)
+    with open("README.md") as fh:
+        readme = fh.read()
+    assert all(f"`{var}`" in readme for var in found), sorted(found)

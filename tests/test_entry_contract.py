@@ -29,29 +29,13 @@ def test_queries_and_oracles_aligned(spark):
     assert rows_only == set()
 
 
-def test_catalog_order_is_deterministic(monkeypatch):
-    """Order is a pure function of committed source (ADVICE r2): identical
-    across calls, never-verified queries lead, verified queries trail, and
-    the registration-order opt-out preserves the set."""
-    from thread_based_map_reduce_spark.plans import catalog
+def test_catalog_order_is_deterministic():
+    """Order is a pure function of committed source: the catalog's
+    registration order, identical across calls, every entry present."""
+    from thread_based_map_reduce_spark.plans.catalog import CATALOG
 
-    monkeypatch.delenv("SPARK_GRAFT_CATALOG_ORDER", raising=False)
     names = list(entrymod.queries())
     assert names == list(entrymod.queries())  # stable across calls
-
-    ver = catalog.DRIVER_VERIFIED
-    unverified = [n for n in names if n not in ver]
-    # every unverified query sorts before every verified one
-    first_verified = min(
-        (names.index(n) for n in names if n in ver), default=len(names)
-    )
-    assert all(names.index(n) < first_verified for n in unverified)
-    # pinned judge-named queries lead the unverified block
-    pinned_live = [n for n in catalog._PINNED_FIRST if n in names and n not in ver]
-    assert names[: len(pinned_live)] == sorted(
-        pinned_live, key=names.index
-    ) and set(names[: len(pinned_live)]) == set(pinned_live)
-
-    monkeypatch.setenv("SPARK_GRAFT_CATALOG_ORDER", "registration")
-    reg = list(entrymod.queries())
-    assert set(reg) == set(names) and reg != names
+    assert names == list(CATALOG)
+    assert list(entrymod.oracle_sql()) == names
+    assert len(names) == 347

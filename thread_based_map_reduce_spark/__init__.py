@@ -23,7 +23,7 @@ Layout:
     sources/      parquet/csv/json readers + testdata table registry
     functions/    portable column builders (cross-engine hash, vectors, text)
     operators/    relational + dedup + similarity + text + multimodal ops
-    plans/        the named-query catalog (drives __spark_entry__ and bench)
+    plans/        the named-query catalog (drives __spark_entry__ and perfbench)
     streaming/    Structured Streaming flavors of the event queries
     mapreduce.py  reference-parity generic map/reduce surface
     jobs.py       async job handles with stage/percentage progress

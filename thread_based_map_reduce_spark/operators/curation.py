@@ -109,7 +109,6 @@ def _grams_sql(n: int) -> str:
     "the eval-gram table is tiny versus the corpus -> broadcast join against "
     "the exploded grams, one doc_id shuffle to re-aggregate",
     tags=("text", "curation", "dedup"),
-    bench=True,
 )
 def q_decontam_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -188,7 +187,6 @@ def q_decontam_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pairwise doc comparison anywhere, so the shape survives 100 TB. "
     "Docs with zero spans drop out (no grams to join), matching the oracle",
     tags=("text", "curation", "dedup"),
-    bench=True,
 )
 def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread_small_scan'd (r12 A/B: 2.2s plain vs 3.0s spread at

@@ -219,7 +219,6 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Exact dedup: group on a 60-bit text hash (narrow shuffle key), keep "
     "min doc_id as canonical",
     tags=("dedup",),
-    bench=True,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -262,7 +261,6 @@ def q_dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-Jaccard verify of candidates only (no O(n^2) stage anywhere; "
     "verify compares 60-bit hashed shingle sets, not strings)",
     tags=("dedup", "minhash", "lsh"),
-    bench=True,
 )
 def q_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_verified_pairs(spark, sf_dir)
@@ -751,7 +749,6 @@ _CLUSTERS_ORACLE = f"""
     "transitive closure. Cluster id = min doc_id in the component — the "
     "canonical document every other member deduplicates to.",
     tags=("dedup", "minhash", "lsh", "iterative"),
-    bench=True,
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _lsh_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -1124,7 +1121,6 @@ def jaccard_blocked_oracle_sql(threshold: float = 0.8, max_block: int = JACCARD_
     "intersect compares bigints (collision odds ~2^-60 per pair, the "
     "standard trade at scale).",
     tags=("dedup", "jaccard"),
-    bench=True,
 )
 def q_dedup_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_blocked_pairs(
@@ -4567,7 +4563,6 @@ _SPAN_CTES_SQL = f"""woccs AS (
     "seed — no all-pairs stage, no corpus broadcast, no suffix array to "
     "build or hold in memory",
     tags=("dedup", "text", "fingerprint", "join"),
-    bench=True,  # r11: heaviest recommended-path operator, guard its perf
 )
 def q_dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_substring_spans_impl(

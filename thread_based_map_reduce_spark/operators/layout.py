@@ -212,7 +212,6 @@ def _global_rank_layouts(
     "OPTIMIZE ZORDER write); ranks use the monotone-bucket prefix-sum "
     "shape, bounds ship as one broadcast row",
     tags=("layout", "sort"),
-    bench=True,
 )
 def q_zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(

@@ -6,8 +6,8 @@ proving the reference's client contracts hold: per-row flatMap with 0..N
 emissions (``MapReduceClient.h:57-58``), reduce over a key's full value
 vector with 0..N emissions, unordered group values (SURVEY §1.4).
 
-They are deliberately NOT in the bench headline set — the Python callback
-path is the slow lane by design; the declarative twins are the scale path.
+The Python callback path is the slow lane by design; the declarative
+twins are the scale path.
 """
 
 from __future__ import annotations

@@ -39,7 +39,6 @@ from ..sources.registry import load_table, load_tables
     """,
     doc="Flagship char-frequency (SampleClient.cpp:34-65) over documents.text",
     tags=("parity", "flagship"),
-    bench=True,
 )
 def q_charcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -77,7 +76,6 @@ def q_charcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q1: pricing summary report over lineitem",
     tags=("agg",),
-    bench=True,
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -186,7 +184,6 @@ def q_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Star join: fact lineitem with all dims broadcast (no fact-side shuffle before agg)",
     tags=("join",),
-    bench=True,
 )
 def q_join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, "lineitem", "orders", "customer", "nation", "region")
@@ -342,7 +339,6 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Top-3 orders per customer: Window.partitionBy + row_number (unique tiebreak)",
     tags=("window",),
-    bench=True,
 )
 def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -820,7 +816,6 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="As-of join: each purchase matched to the user's most recent signup "
     "(implemented as last-ignorenulls over a per-user window — one shuffle, no join)",
     tags=("asof", "window"),
-    bench=True,
 )
 def q_asof_join_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -898,7 +893,6 @@ def q_range_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Tumbling 1-hour event-time window aggregation (batch twin of streaming/events.py)",
     tags=("window", "streaming"),
-    bench=True,
 )
 def q_events_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -174,7 +174,6 @@ def q_union_all_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization: lag-gap > 10 min starts a new session; per-user "
     "session counts (one shuffle by user, two window passes)",
     tags=("window", "sessionize"),
-    bench=True,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -1,6 +1,6 @@
 """Second wave of relational coverage: grouping sets, ranking-window
 family, range frames, higher-order array functions, map columns,
-correlated EXISTS, two TPC-H-shaped bench queries, a salted skew-safe
+correlated EXISTS, two TPC-H-shaped queries, a salted skew-safe
 aggregation, and latest-row dedup.
 
 All are Catalyst built-ins (SURVEY.md §2.2 "engine plan" column) — no
@@ -209,7 +209,6 @@ def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reach the parquet reader (PushedFilters), zero shuffle beyond the "
     "single-row final agg",
     tags=("agg", "pushdown", "tpch"),
-    bench=True,
 )
 def q_tpch_q6_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -248,7 +247,6 @@ def q_tpch_q6_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded-revenue top-10 (round before ordering so cross-engine ulps "
     "cannot reorder near-ties; o_orderkey tiebreak)",
     tags=("join", "agg", "topk", "tpch"),
-    bench=True,
 )
 def q_tpch_q3_toporders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
@@ -304,7 +302,6 @@ def q_tpch_q3_toporders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tables (region/nation/customer/supplier) broadcast; the two fact "
     "tables (orders, lineitem) meet in the one shuffle join.",
     tags=("join", "agg", "tpch"),
-    bench=True,
 )
 def q_tpch_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = {n: load_table(spark, sf_dir, n) for n in
@@ -356,7 +353,6 @@ def q_tpch_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "supplier orders where only this supplier shipped late) — a semi join "
     "and an anti join chained on the same key",
     tags=("join", "agg", "subquery", "tpch"),
-    bench=True,
 )
 def q_tpch_q21_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -970,7 +966,6 @@ def q_json_map_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "starts a new session (oracle uses >=). Streaming twin shares this "
     "operator via readStream.",
     tags=("window", "sessionize", "streaming"),
-    bench=True,
 )
 def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -66,7 +66,6 @@ _COS_SQL = (
     doc="Exact top-5 cosine neighbors for 10 query vectors: broadcast queries x "
     "full scan + per-query window (the exactness baseline for ANN variants)",
     tags=("similarity", "ann"),
-    bench=True,
 )
 def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

@@ -41,7 +41,6 @@ EN_MARKERS = ("the", "a", "is", "of")
     """,
     doc="Per-language token counting and document statistics",
     tags=("text",),
-    bench=True,
 )
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2909,10 +2908,6 @@ def _gopher_oracle_sql() -> str:
     "pass of higher-order functions over the token/line/gram arrays — "
     "zero shuffles, zero joins; streams over any corpus partitioning",
     tags=("text", "curation"),
-    # VERDICT r11 #5: at ~8 s (sf0.1) this is the heaviest recommended-path
-    # operator — promoted into the headline set so the driver's bench
-    # artifact guards it round-over-round.
-    bench=True,
 )
 def q_gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the whole filter is map-only, so a KB-scale single-row-group scan

@@ -4,7 +4,8 @@ Every operator from SURVEY.md §2 (reference parity + mandated extensions)
 registers here as a ``Query``: a Spark DataFrame builder plus — when the
 semantics are SQL-expressible — a DuckDB oracle string with *identical
 column names and types*. ``__spark_entry__`` (the driver contract), the
-bench harness, and the oracle self-test all read this one registry.
+benchmark, and the oracle self-test all read this one registry, in
+registration order.
 
 Conventions that keep the order-insensitive value-hash comparison honest
 (output order is not a contract, matching the reference — SURVEY §1.4):
@@ -53,7 +54,6 @@ class Query:
     oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    bench: bool = False  # include in the headline bench set
 
 
 CATALOG: dict[str, Query] = {}
@@ -140,7 +140,6 @@ def register(
     oracle: str | None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    bench: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
     mat_ctes = _ORACLE_MATERIALIZED_CTES.get(name)
@@ -159,7 +158,7 @@ def register(
 
         pinned.__name__ = fn.__name__
         pinned.__doc__ = fn.__doc__
-        CATALOG[name] = Query(name=name, fn=pinned, oracle=oracle, doc=doc, tags=tags, bench=bench)
+        CATALOG[name] = Query(name=name, fn=pinned, oracle=oracle, doc=doc, tags=tags)
         return fn
 
     return wrap
@@ -188,280 +187,11 @@ def _load_all() -> None:
     )
 
 
-# Names with a hard green row in committed CORRECTNESS_r*.json driver
-# artifacts. A STATIC constant — regenerated once per round by
-# ``scripts/update_verified.py`` and committed — so the catalog order is
-# byte-identical in every environment and never depends on reading result
-# files at call time (ADVICE r2: the previous glob of CORRECTNESS_r*.json
-# made ordering environment-dependent). Set
-# SPARK_GRAFT_CATALOG_ORDER=registration to disable rotation entirely and
-# get plain registration order.
-# Regenerated after CORRECTNESS_r10.json (331 hash-green names across
-# r1-r10 — the full r10 catalog; zero mismatches ever).
-# 347 driver-verified names
-DRIVER_VERIFIED: frozenset[str] = frozenset({
-    "ab_test_zstat", "acf_hourly_correlogram", "agg_salted_skew",
-    "ams_f2_sketch_estimate", "ann_bruteforce_topk", "ann_lsh_bucketed",
-    "ann_lsh_multiprobe", "ann_method_recall_eval", "ann_recall_eval",
-    "approx_aggregates", "approx_quantile_eval", "argmax_aggregates",
-    "array_hof", "array_setops", "asof_join_signup",
-    "association_rules_lift", "basket_part_pairs", "benford_digit_stats",
-    "best_day_per_month", "bigram_nll_quality", "bitwise_ops",
-    "bloom_filter_join_stats", "bm25_retrieval_topk", "bpe_apply_encode",
-    "bpe_pair_merge_topk", "bpe_train_merges", "bucketed_join_revenue",
-    "c4_filters", "c4_sentence_span_dedup", "case_banding",
-    "ccnet_perplexity_buckets", "cdc_chunk_stats", "cdc_merge_apply",
-    "centroid_per_label", "char_trigram_profile", "charcount",
-    "chi2_lang_source_independence", "churn_label_stats",
-    "cluster_quality_db_index", "cogroup_user_activity",
-    "cohort_retention_matrix", "collect_sorted", "compaction_plan_stats",
-    "conditional_aggregates", "consistent_hash_rebalance",
-    "corpus_curation_stats", "correlated_min_subquery",
-    "countmin_topk_estimate", "cross_join_bounded", "cube_counts",
-    "cumulative_revenue_share", "curation_filter_ablation",
-    "curation_flags_table", "curation_funnel_stats", "curation_pipeline_v2",
-    "curriculum_manifest", "customer_ltv_deciles",
-    "date_interval_arithmetic", "dbscan_lsh_clusters",
-    "decision_stump_train", "decontam_eval_overlap",
-    "decontam_exact_substring", "decontam_scrub_text",
-    "dedup_blocking_recall_eval", "dedup_canonical_map", "dedup_clusters",
-    "dedup_clusters_twostar", "dedup_embedding_cosine",
-    "dedup_embedding_lsh", "dedup_exact", "dedup_exact_substring_spans",
-    "dedup_graph_triangles", "dedup_incremental_e2e",
-    "dedup_incremental_pairs", "dedup_jaccard_blocked", "dedup_keep_best",
-    "dedup_minhash_lsh_pairs", "dedup_minhash_signatures",
-    "dedup_normalized", "dedup_prefix_filter_pairs", "dedup_removal_sweep",
-    "dedup_scrub_spans", "dedup_simhash", "dedup_simhash_hamming_pairs",
-    "dedup_sorted_neighborhood", "dedup_winnow_pairs",
-    "detok_fidelity_stats", "discount_effect_by_band",
-    "distinct_counts_exact", "distinct_pairs", "doc_char_entropy",
-    "doc_fingerprint", "domain_mix_weights", "dq_audit_stats",
-    "dsir_importance_select", "dup_graph_bfs_hops",
-    "dup_graph_degree_stats", "dup_graph_link_prediction",
-    "dup_graph_pagerank", "dup_pairs_edit_distance",
-    "dup_span_coverage_exact", "dup_span_fraction", "embedding_covariance",
-    "embedding_norm_stats", "embedding_quantize_stats",
-    "embeddings_dim_stats", "emd_price_urgent_binned",
-    "event_transition_entropy", "event_type_transitions",
-    "events_anomaly_trailing_z", "events_autocorr_lag1",
-    "events_cusum_changepoint", "events_decayed_trend",
-    "events_dow_hour_heatmap", "events_error_rate_hourly",
-    "events_interarrival_stats", "events_rollup_day_from_hour",
-    "events_sliding_2h", "events_tumbling_hour", "exists_correlated",
-    "explode_outer_rare_tokens", "filter_pushdown", "forward_fill_values",
-    "functional_dependency_audit", "funnel_attribution_last_touch",
-    "funnel_signup_purchase", "gopher_quality_rules",
-    "gopher_repetition_rules", "group_kfold_cv", "grouping_sets",
-    "hapax_rate_per_lang", "hard_negative_mining", "having_filter",
-    "heldout_backoff_nll", "hilbert_pruning_stats", "hll_distinct_estimate",
-    "inline_struct_explode", "inverted_index_stats",
-    "ivf_kmeans_assignments", "ivf_search", "ivf_search_nprobe2",
-    "join_anti", "join_cardinality_eval", "join_full_outer",
-    "join_hint_shuffle_hash", "join_left_outer", "join_right_outer",
-    "join_salted_skew", "join_semi", "join_star_revenue", "json_extract",
-    "json_map_explode", "json_struct_parse", "k_anonymity_stats",
-    "key_skew_report", "kll_quantile_sketch", "km_survival_signup_purchase",
-    "kmv_distinct_estimate", "l_diversity_stats", "langid_confusion_matrix",
-    "langid_heuristic", "lateral_topk_per_nation", "latest_event_per_user",
-    "leakage_safe_split", "limit_offset_page", "longest_streak_per_user",
-    "lsh_band_tuning_curve", "mad_outliers_by_type",
-    "mannwhitney_price_urgent", "map_column", "markov_next_event_accuracy",
-    "median_by_status", "minhash_estimate_error", "minhash_estimate_eval",
-    "mix_quota_exact_manifest", "mix_quota_sample",
-    "mode_priority_per_status", "mr_charcount", "mr_lang_source_expand",
-    "mr_wordcount_filtered", "multimodal_bmp_decode",
-    "multimodal_decode_stats", "multimodal_flip_augment",
-    "multimodal_frame_sample", "multimodal_jpeg_ac_decode",
-    "multimodal_jpeg_decode", "multimodal_meta", "multimodal_pgm_decode",
-    "multimodal_png_decode", "multimodal_resize_thumbs",
-    "multimodal_wav_decode", "multimodal_wav_features",
-    "multimodal_y4m_decode", "multimodal_y4m_motion",
-    "mv_incremental_refresh", "nb_langid_train_eval", "nested_struct_ops",
-    "not_in_subquery", "null_safe_join", "null_scalar_functions",
-    "ohlc_bars_hourly", "ols_kfold_cv", "ols_price_model",
-    "optics_reachability", "orders_backlog_monthly",
-    "orders_first_vs_repeat", "orders_monthly_growth",
-    "pack_sequences_stats", "pandas_udaf_micro_mean",
-    "pandas_udf_token_count", "pca_power_iteration", "peak_concurrency",
-    "percentiles", "pii_scrub_stats", "pivot_status", "posexplode_tokens",
-    "pq_adc_rerank_topk", "pq_adc_topk", "pq_codebook_stats",
-    "pq_recall_eval", "pq_train_stats", "price_histogram",
-    "profile_documents", "projection", "psi_drift_stats", "rag_chunk_stats",
-    "range_join_clicks", "range_partition_balance", "ratio_to_report",
-    "record_linkage_customer", "record_linkage_em_pairs",
-    "record_linkage_em_weights", "record_linkage_threshold_sweep",
-    "recursive_month_spine", "regex_functions", "reservoir_sample_per_key",
-    "retention_weekly", "returns_rate_by_month", "revenue_gini_by_nation",
-    "rfm_segments", "rolling_reach_7d", "rollup_qty",
-    "sample_hash_deterministic", "sample_per_group", "scalar_date",
-    "scalar_math", "scalar_string", "scd_intervals", "seasonal_hod_profile",
-    "segmented_trend_breakpoint", "semantic_dedup_stats",
-    "semdedup_embedding_prune", "session_window_agg", "sessionize",
-    "set_except", "set_intersect", "set_union_distinct",
-    "setop_all_variants", "shard_assignment_stats",
-    "sigstore_append_compact", "skyline_pareto_parts", "source_lang_kl",
-    "source_lang_quality_matrix", "stats_agg", "stratified_token_quantiles",
-    "streaming_c4_filter_runtime", "streaming_dedup_runtime",
-    "streaming_minhash_dedup_runtime", "streaming_outer_join_runtime",
-    "streaming_quality_filter_runtime", "streaming_session_runtime",
-    "streaming_sliding_runtime", "streaming_stateful_runtime",
-    "streaming_static_join_runtime", "streaming_stream_join_runtime",
-    "streaming_timer_ttl_runtime", "streaming_tumbling_runtime",
-    "streaming_upsert_runtime", "string_functions_2", "subquery_scalar",
-    "temperature_mix_allocation", "text_embedding_alignment",
-    "text_quality_score", "text_repetition_ratio", "text_token_stats",
-    "textrank_keywords", "tfidf_top_terms", "theil_sen_trend",
-    "theta_sketch_setops", "timeseries_gap_fill", "token_pmi_pairs",
-    "token_regex_count", "tokenizer_fertility_by_lang",
-    "top_bigrams_per_lang", "topk_global", "topk_with_ties", "tpch_q1",
-    "tpch_q10_returned_customers", "tpch_q11_value_concentration",
-    "tpch_q12_shipmode", "tpch_q13_order_distribution",
-    "tpch_q14_promo_share", "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety", "tpch_q17_small_quantity",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive",
-    "tpch_q20_dominant_suppliers", "tpch_q21_waiting_orders",
-    "tpch_q22_idle_customers", "tpch_q3_toporders",
-    "tpch_q4_priority_check", "tpch_q5_region_revenue", "tpch_q6_revenue",
-    "tpch_q7_nation_volume", "tpch_q8_market_share",
-    "tpch_q9_product_profit", "train_val_test_split_stats",
-    "trend_slope_per_type", "trending_per_hour", "udtf_tokenize",
-    "unigram_nll_quality", "union_all_tagged", "union_by_name_missing",
-    "unpivot_part_metrics", "user_path_trigrams", "value_percentile_bands",
-    "variant_json_shred", "vector_arithmetic", "vocab_growth_curve",
-    "vocab_oov_coverage", "weak_label_vote_stats", "weighted_avg_price",
-    "weighted_median_price_by_flag", "weighted_sample_ares",
-    "window_lag_gap", "window_range_frame", "window_rank_family",
-    "window_running_sum", "window_topk_per_group", "window_value_functions",
-    "winnowing_fingerprints", "woe_iv_price_bins", "word_freq_topn",
-    "zipf_fit_stats", "zorder_pruning_stats", "zscore_outliers"
-})
-
-
-# Round-13 driver window, in priority order (rotation hygiene — every
-# changed-after-green query is re-proved by the driver): (1) every query
-# whose SPARK side changed this optimization round — the count-based
-# Jaccard truth + concurrent family builds (dedup_blocking_recall_eval),
-# the concurrent-build removal sweep, the Arrow cogroup, the LUT-decoder
-# + spread-scan multimodal lanes, the norm-checkpoint removal shared by
-# all four record_linkage entries, and the seed occurrence cap shared by
-# the exact-substring span family; (2) every query whose ORACLE text
-# gained AS MATERIALIZED hints (results verified bit-identical at sf0.01
-# before listing; the driver re-proving them closes the loop); (3) the
-# oldest-green rotation — the r4-vintage relational tail, trimmed so the
-# window is exactly 50 names (the driver's sample size).
-_PINNED_FIRST = (
-    # (1) Spark-side changes this round
-    "dedup_blocking_recall_eval",
-    "dedup_removal_sweep",
-    "dedup_exact_substring_spans",
-    "dup_span_coverage_exact",
-    "dedup_scrub_spans",
-    "cogroup_user_activity",
-    "multimodal_jpeg_decode",
-    "multimodal_jpeg_ac_decode",
-    "multimodal_png_decode",
-    "record_linkage_customer",
-    "record_linkage_em_weights",
-    "record_linkage_em_pairs",
-    "record_linkage_threshold_sweep",
-    # (2) oracle-side MATERIALIZED hints (values verified identical)
-    "gopher_repetition_rules",
-    "curation_funnel_stats",
-    "curation_filter_ablation",
-    "curation_flags_table",
-    "dedup_canonical_map",
-    "group_kfold_cv",
-    "optics_reachability",
-    "leakage_safe_split",
-    "lsh_band_tuning_curve",
-    "dbscan_lsh_clusters",
-    "semdedup_embedding_prune",
-    "corpus_curation_stats",
-    "dedup_keep_best",
-    "dup_graph_bfs_hops",
-    "dedup_clusters",
-    "dup_graph_pagerank",
-    # (3) oldest-green rotation (r4 vintage)
-    "events_rollup_day_from_hour",
-    "explode_outer_rare_tokens",
-    "forward_fill_values",
-    "inline_struct_explode",
-    "join_hint_shuffle_hash",
-    "join_right_outer",
-    "json_map_explode",
-    "json_struct_parse",
-    "lateral_topk_per_nation",
-    "limit_offset_page",
-    "median_by_status",
-    "mode_priority_per_status",
-    "nested_struct_ops",
-    "null_safe_join",
-    "null_scalar_functions",
-    "orders_first_vs_repeat",
-    "orders_monthly_growth",
-    "price_histogram",
-    "ratio_to_report",
-    "recursive_month_spine",
-    "retention_weekly",
-)
-_PINNED_RANK = {name: i for i, name in enumerate(_PINNED_FIRST)}
-
-# Families whose only green signal so far is the local pytest oracle run —
-# these lead the unverified block so the driver's sampled hard gate reaches
-# them first (the relational basics already have driver-green rows).
-_NOVEL_TAGS = frozenset(
-    {"dedup", "similarity", "ann", "lsh", "ivf", "text", "mapreduce",
-     "multimodal", "streaming", "udtf", "cogroup", "udf", "tpch", "layout",
-     "diagnostics"}
-)
-
-
-def _ordered() -> list[Query]:
-    """Catalog in deterministic driver-facing order.
-
-    Default: unverified queries lead (pinned judge-named first, then
-    novel-tag families, then the relational tail), queries already holding
-    a hard CORRECTNESS row trail — so the driver's fixed per-round sample
-    window proves new queries each round instead of re-proving old ones.
-    The order is a pure function of this committed file (DRIVER_VERIFIED
-    is static), identical in every environment.
-
-    ``SPARK_GRAFT_CATALOG_ORDER=registration`` opts out of rotation and
-    yields plain registration order.
-    """
-    import os
-
-    _load_all()
-    items = list(CATALOG.values())
-    if os.environ.get("SPARK_GRAFT_CATALOG_ORDER") == "registration":
-        return items
-
-    def rank(q: Query) -> tuple[int, int]:
-        if q.oracle is None:
-            # A sampled no-oracle query yields a guaranteed rows-only/err
-            # row (it happened to ivf_kmeans_assignments in r3) — never let
-            # one displace ANY oracle-backed query, deferred or verified,
-            # from the sample window: strictly last.
-            return (5, 0)
-        if q.name in _PINNED_RANK:
-            # explicit round-5 window, in _PINNED_FIRST tuple order
-            return (0, _PINNED_RANK[q.name])
-        if q.name in DRIVER_VERIFIED:
-            return (4, 0)  # already has a hard driver row — re-proved last
-        return (1, 0) if _NOVEL_TAGS.intersection(q.tags) else (2, 0)
-
-    # stable sort keeps registration order within each band
-    return sorted(items, key=rank)
-
-
 def queries() -> dict[str, QueryFn]:
-    return {q.name: q.fn for q in _ordered()}
+    _load_all()
+    return {name: q.fn for name, q in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
-
-
-def bench_queries() -> dict[str, QueryFn]:
     _load_all()
-    return {name: q.fn for name, q in CATALOG.items() if q.bench}
+    return {name: q.oracle for name, q in CATALOG.items() if q.oracle is not None}

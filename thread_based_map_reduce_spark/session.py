@@ -2,8 +2,9 @@
 
 The reference engine is configured with a single ``multiThreadLevel`` knob
 (``MapReduceFramework.h:18-20``); our equivalent is the local[N] core count
-plus shuffle parallelism. Defaults target the test box (local[32]) but the
-builders here only *default* — any externally supplied session (e.g. the
+plus shuffle parallelism. N is ``$SPARK_GRAFT_CPUS``, else the cores this
+process may run on; the driver heap is ``$TBMR_DRIVER_MEM`` (default 24g).
+The builders here only *default* — any externally supplied session (e.g. the
 driver's) works with every operator in this package, because query builders
 pin the session-level settings they rely on (UTC timezone) at call time.
 """
@@ -15,23 +16,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["get_spark", "pin_session_defaults", "reliable_checkpoint"]
-
-
-_TMPFS_AUTO_MIN_FREE = 32 * 1024**3  # bytes free on /dev/shm for auto mode
-
-
-def _tmpfs_shuffle_ok(path: str) -> bool:
-    """Decide whether shuffle/spill dirs may live on RAM-backed tmpfs."""
-    flag = os.environ.get("TBMR_TMPFS_SHUFFLE")
-    if flag is not None:
-        return flag.strip().lower() in ("1", "true", "yes", "on")
-    if not (os.path.isdir(path) and os.access(path, os.W_OK)):
-        return False
-    try:
-        st = os.statvfs(path)
-    except OSError:
-        return False
-    return st.f_bavail * st.f_frsize >= _TMPFS_AUTO_MIN_FREE
 
 
 def get_spark(
@@ -48,7 +32,7 @@ def get_spark(
       over-parallelizes small scale factors.
     - Arrow on: every Python-side operator in this package is Arrow-batched.
     """
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if extra_conf and SparkSession.getActiveSession() is not None:
         # getOrCreate silently ignores builder conf on reuse — a caller
         # relying on static conf (e.g. shuffle_metrics.py's event log)
@@ -79,21 +63,6 @@ def get_spark(
         # the big side.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Shuffle/spill files on tmpfs when the box has a LARGE one (the test
-    # box mounts a 126 GiB /dev/shm; sf0.1 shuffle data is MBs). The
-    # default /tmp sits on the system disk, whose I/O-wait — not CPU —
-    # dominated the shuffle-heavy dedup timings on the shared box (BENCH
-    # r4/r5 drift investigation: 98% idle CPU, load driven by iowait).
-    # Gated (ADVICE r5): spill exists to relieve memory pressure, so
-    # pointing it at RAM-backed tmpfs on an arbitrary host would consume
-    # RAM (or hit ENOSPC) exactly when spilling matters. Auto mode
-    # requires >= 32 GiB free on /dev/shm — a deliberate "big test box"
-    # signature, far above the testdata's worst-case shuffle footprint;
-    # TBMR_TMPFS_SHUFFLE=1 forces it on, =0 forces it off. A real cluster
-    # sets spark.local.dir to executor-local NVMe; nothing here depends
-    # on the knob.
-    if _tmpfs_shuffle_ok("/dev/shm"):
-        builder = builder.config("spark.local.dir", "/dev/shm/tbmr-spark-local")
     # Static conf (event log, etc.) for measurement harnesses; only
     # effective when this call actually CREATES the session — getOrCreate
     # ignores builder conf on reuse, so callers needing it must stop the

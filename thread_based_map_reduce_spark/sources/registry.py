@@ -108,11 +108,8 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
 # serializes every downstream map-only operator. 4 GB = 32 cores x the
 # default 128 MB split: below it a scan cannot reach full local
 # parallelism from splits alone (measured r12: a 120 MB one-file corpus
-# ran a map-only filter serially for 600+ s; spread, ~25 s). Overridable
-# for experiments; 0 disables spreading entirely.
-SPREAD_SMALL_MAX_BYTES = int(
-    os.environ.get("TBMR_SPREAD_SMALL_MAX_BYTES", str(4 * 1024**3))
-)
+# ran a map-only filter serially for 600+ s; spread, ~25 s).
+SPREAD_SMALL_MAX_BYTES = 4 * 1024**3
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
@@ -122,14 +119,14 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     has thousands of splits and this helper is a no-op, so no corpus-sized
     shuffle is ever introduced). The repartition cost is bounded by the
     smallness test itself: it fires only when total input bytes <
-    SPREAD_SMALL_MAX_BYTES (4 GB default — cores x the 128 MB split
+    SPREAD_SMALL_MAX_BYTES (4 GB — cores x the 128 MB split
     size; one round of the cluster's scan bandwidth) AND the scan is
     under core-parallel from splits alone. Deterministic output
     (round-robin sorts locally before assigning, SPARK-23207),
     row-identical — safe for every oracle-checked consumer."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    if cores <= 1 or SPREAD_SMALL_MAX_BYTES <= 0:
+    if cores <= 1:
         return df
     try:
         files = df.inputFiles()
