@@ -13,6 +13,12 @@ the live stage graph onto the reference's MAP/SHUFFLE/REDUCE labels —
 pre-shuffle stages are MAP, post-shuffle stages are REDUCE, and SHUFFLE is
 the instant between them (the exchange itself has no tasks of its own;
 SURVEY §7 hardness note (b)).
+
+Empty input is rejected at start, like the reference's ``InputVec`` size
+check (``MapReduceFramework.cpp:326-331``). "Empty input" means every leaf
+relation of the plan (each scan, range or local relation) is empty; a
+``map_fn`` that emits nothing over a non-empty input is not an error, and
+the job simply returns ``[]``.
 """
 
 from __future__ import annotations
@@ -49,13 +55,11 @@ class JobHandle:
     MapReduceFramework.cpp:365-378, and warns on null/closed handles)."""
 
     def __init__(self, df: DataFrame, collect: bool):
-        self._spark = df.sparkSession
-        self._sc = self._spark.sparkContext
+        self._sc = df.sparkSession.sparkContext
         self._group = f"tbmr-job-{uuid.uuid4().hex[:12]}"
         self._result: list | None = None
         self._error: BaseException | None = None
         self._closed = False
-        self._started = threading.Event()
         # monotone progress memory: the reference's stage/pct progression
         # never moves backwards (packed counter only increments,
         # MapReduceFramework.cpp:13-46); AQE submits stages incrementally so
@@ -66,7 +70,6 @@ class JobHandle:
         def action() -> None:
             try:
                 self._sc.setJobGroup(self._group, "tbmr map/reduce job")
-                self._started.set()
                 if collect:
                     self._result = df.collect()
                 else:
@@ -74,7 +77,6 @@ class JobHandle:
                     self._result = []
             except BaseException as e:  # surfaced on wait, like job abort
                 self._error = e
-                self._started.set()
 
         self._thread = threading.Thread(target=action, daemon=True, name=self._group)
         self._thread.start()
@@ -168,22 +170,42 @@ class JobHandle:
         self.close()
 
 
+def _input_is_empty(df: DataFrame) -> bool:
+    """True iff every leaf relation of ``df``'s analyzed plan is empty.
+
+    Each probe is a ``limit(1)`` over one leaf, so no map, shuffle or reduce
+    work above the leaves runs; probing stops at the first non-empty leaf.
+    A ``CTERelationRef`` is skipped: it cannot run on its own, and the
+    leaves of its definition are probed instead.
+    """
+    spark = df.sparkSession
+    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(
+        of_rows(spark._jsparkSession, leaf).isEmpty()
+        for leaf in map(leaves.apply, range(leaves.size()))
+        if leaf.nodeName() != "CTERelationRef"
+    )
+
+
 def start_map_reduce_job(
     df: DataFrame,
     *,
     multi_thread_level: int | None = None,
-    validate_input: bool = True,
     collect: bool = True,
 ) -> JobHandle:
     """Async-start an action over a (map/reduce or any) DataFrame plan.
 
     Argument validation mirrors the reference (``MapReduceFramework.cpp:
-    326-331``): non-positive parallelism and empty input are rejected.
+    326-331``): non-positive parallelism and empty input are rejected
+    synchronously. Input is empty when every leaf relation of the plan is
+    empty; the plan itself is not run for the check, so a ``map_fn`` that
+    emits nothing over a non-empty input starts normally and returns ``[]``.
     ``multi_thread_level`` is advisory on Spark — the scheduler owns task
     parallelism — but the reference's contract is enforced.
     """
     if multi_thread_level is not None and multi_thread_level <= 0:
         raise JobError(f"multi_thread_level must be positive, got {multi_thread_level}")
-    if validate_input and df.isEmpty():
+    if _input_is_empty(df):
         raise JobError("input is empty")
     return JobHandle(df, collect=collect)
