@@ -50,8 +50,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        from pyspark.sql import functions as F
-
         # Scoped: nanosAsLong only needs to be set while the parquet footer
         # schema is resolved (eager, at read time); restore the caller's
         # value so unrelated TIMESTAMP(NANOS) reads on this (possibly
