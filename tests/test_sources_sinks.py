@@ -4,16 +4,35 @@ and scan-level pushdown (PushedFilters / pruned ReadSchema)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from thread_based_map_reduce_spark.sources.registry import (
+    TABLE_NAMES,
+    _normalize_event_ts,
     from_rows,
     load_table,
     read_source,
+    table_row_count,
     write_sink,
 )
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _set_conf(spark, key, value):
+    """Set ``key`` to ``value``, or unset it when ``value`` is None."""
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
 
 
 def _sorted_rows(df, cols):
@@ -141,3 +160,88 @@ def test_events_ts_both_parquet_vintages(spark, sf_dir, tmp_path_factory):
     assert got["nanos"] == got["micros"]
     assert got["micros"][0][1].startswith("2024-01-01T00:00:00")
     assert got["micros"][1][1].endswith("00:00.123456")
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_load_table_schema_equals_spark_inference(spark, sf_dir, name):
+    """The footer schema load_table hands the reader is the one Spark's own
+    schema inference gives (``events`` after the same ts normalization)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        prev = spark.conf.get(NANOS_AS_LONG, None)
+        spark.conf.set(NANOS_AS_LONG, "true")
+        try:
+            raw = spark.read.parquet(path)
+        finally:
+            _set_conf(spark, NANOS_AS_LONG, prev)
+        want = raw.withColumn("ts", _normalize_event_ts(raw)).schema
+    else:
+        want = spark.read.parquet(path).schema
+    assert load_table(spark, sf_dir, name).schema == want
+
+
+def test_load_table_starts_no_spark_job(spark, sf_dir):
+    sc = spark.sparkContext
+    group = f"load-table-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "load every testdata table")
+    try:
+        for name in TABLE_NAMES:
+            load_table(spark, sf_dir, name)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("prev", [None, "false"])
+def test_load_events_leaves_nanos_conf_alone(spark, tmp_path, prev):
+    """A TIMESTAMP(NANOS) events file loads and scans with the session's
+    nanosAsLong unset or false, and load_table leaves that setting as it
+    found it."""
+    micros = [1704067200_000000, 1704070800_123456]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([m * 1000 for m in micros], pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    before = spark.conf.get(NANOS_AS_LONG, None)
+    _set_conf(spark, NANOS_AS_LONG, prev)
+    try:
+        df = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(NANOS_AS_LONG, None) == prev
+        got = sorted(r.ts.isoformat() for r in df.collect())
+        assert spark.conf.get(NANOS_AS_LONG, None) == prev
+    finally:
+        _set_conf(spark, NANOS_AS_LONG, before)
+    assert got == ["2024-01-01T00:00:00", "2024-01-01T01:00:00.123456"]
+
+
+def test_load_table_missing_file_raises_path_not_found(spark, tmp_path):
+    with pytest.raises(AnalysisException) as err:
+        load_table(spark, str(tmp_path), "orders")
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_load_table_reads_a_file_replaced_at_the_same_path(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([7], pa.int32()), "r_name": pa.array(["ASIA"])}),
+        path,
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.dtypes == [("r_regionkey", "int"), ("r_name", "string")]
+    assert [tuple(r) for r in df.collect()] == [(7, "ASIA")]
+
+
+def test_table_row_count_recounts_a_file_replaced_at_the_same_path(spark, tmp_path):
+    path = str(tmp_path / "nation.parquet")
+    pq.write_table(pa.table({"n_nationkey": pa.array(range(3), pa.int64())}), path)
+    assert table_row_count(spark, str(tmp_path), "nation") == 3
+    pq.write_table(pa.table({"n_nationkey": pa.array(range(5), pa.int64())}), path)
+    assert table_row_count(spark, str(tmp_path), "nation") == 5

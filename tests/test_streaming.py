@@ -4,16 +4,34 @@ stateful per-user operator must agree with a batch groupBy."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from thread_based_map_reduce_spark.plans.catalog import queries
 from thread_based_map_reduce_spark.sources.registry import load_table
 from thread_based_map_reduce_spark.streaming.events import (
+    minhash_dedup_stream,
     run_stream_to_memory,
     session_counts_stream,
     tumbling_counts_stream,
     user_running_totals_stream,
 )
+
+
+def test_stream_sources_start_no_spark_job(spark, sf_dir):
+    # the file source's schema comes from the testdata footer on the
+    # driver, not from a schema-inference job over the staging dir
+    sc = spark.sparkContext
+    group = f"stream-start-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "build two streams")
+    try:
+        tumbling_counts_stream(spark, sf_dir)
+        minhash_dedup_stream(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_stream_tumbling_equals_batch(spark, sf_dir):

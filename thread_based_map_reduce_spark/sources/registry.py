@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 TABLE_NAMES = (
     "region",
@@ -38,34 +40,84 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and prunes columns into this scan, which is the whole point of
     expressing queries declaratively (SURVEY.md §4).
 
+    The schema comes from the file's parquet footer, read on the driver by
+    ``_footer_schema`` with Spark's own converter, and is handed to the
+    reader, so loading a table starts no Spark job (plain
+    ``spark.read.parquet`` infers it with a one-task job per call). There
+    is no memo: every call reads the footer of the file it loads. A table
+    stored as a directory, or a missing path, goes to Spark's own schema
+    inference under the session's settings, which also raises its usual
+    ``PATH_NOT_FOUND``.
+
     ``events.ts`` arrives in two testdata vintages: parquet
     TIMESTAMP(NANOS) — which Spark's vectorized reader rejects outright, so
-    we read it as raw nanos (``nanosAsLong``) and floor to microsecond
-    timestamps (verified lossless; no sub-microsecond residue) — or plain
-    µs TIMESTAMP without timezone, which Spark surfaces as TIMESTAMP_NTZ.
-    Both normalize to session-UTC TIMESTAMP so every downstream window /
-    watermark / oracle sees one type with DuckDB-identical wall values.
+    its footer is converted with ``nanosAsLong`` (raw nanos as a long) and
+    floored to microsecond timestamps (verified lossless; no sub-microsecond
+    residue) — or plain µs TIMESTAMP without timezone, which Spark surfaces
+    as TIMESTAMP_NTZ. Both normalize to session-UTC TIMESTAMP so every
+    downstream window / watermark / oracle sees one type with
+    DuckDB-identical wall values. ``nanosAsLong`` is an argument of the
+    converter only: the session's ``spark.sql.legacy.parquet.nanosAsLong``
+    is never touched.
     """
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _footer_schema(spark, path, nanos_as_long=name == "events")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    raw = reader.parquet(path)
     if name == "events":
-        # Scoped: nanosAsLong only needs to be set while the parquet footer
-        # schema is resolved (eager, at read time); restore the caller's
-        # value so unrelated TIMESTAMP(NANOS) reads on this (possibly
-        # caller-supplied) session are not silently surfaced as longs.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            raw = spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         return raw.withColumn("ts", _normalize_event_ts(raw))
-    return spark.read.parquet(path)
+    return raw
+
+
+def _footer_schema(
+    spark: SparkSession, path: str, nanos_as_long: bool = False
+) -> StructType | None:
+    """Spark schema of the single parquet file at ``path``, read from its
+    footer on the driver (no Spark job); ``None`` when ``path`` is not a
+    file (a directory or a missing path), for the caller to hand to Spark.
+
+    It reads and converts the footer exactly as schema inference does
+    (``ParquetFileFormat.mergeSchemasInParallel`` in Spark 4.1): a schema
+    Spark stored in the file's row-metadata key wins; otherwise the parquet
+    types are converted under the session's binaryAsString,
+    INT96AsTimestamp, inferTimestampNTZ, nanosAsLong and
+    respectUnknownTypeAnnotation flags and the converter's defaults for
+    the rest. ``nanos_as_long`` forces nanosAsLong on for this conversion
+    only.
+    """
+
+    def jclass(name):  # by full name: one py4j round trip per use, not per package
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    hpath = jclass("org.apache.hadoop.fs.Path")(path)
+    fs = hpath.getFileSystem(hconf)
+    if not fs.isFile(hpath):
+        return None
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
+    fmt = getattr(jclass(pq + "ParquetFileFormat$"), "MODULE$")
+    converter_cls = jclass(pq + "ParquetToSparkSchemaConverter")
+
+    def default(i):  # the converter's i-th constructor default
+        return getattr(converter_cls, f"$lessinit$greater$default${i}")()
+
+    sql_conf = state.conf()
+    converter = converter_cls(
+        sql_conf.isParquetBinaryAsString(),
+        sql_conf.isParquetINT96AsTimestamp(),
+        default(3),  # caseSensitive
+        sql_conf.parquetInferTimestampNTZEnabled(),
+        nanos_as_long or sql_conf.legacyParquetNanosAsLong(),
+        default(6),  # useFieldId
+        default(7),  # ignoreVariantAnnotation
+        sql_conf.parquetReaderRespectUnknownTypeAnnotation(),
+    )
+    files = jclass("org.apache.spark.api.python.PythonUtils").toSeq([fs.getFileStatus(hpath)])
+    footer = fmt.readParquetFootersInParallel(hconf, files, False).head()
+    return _parse_datatype_json_string(fmt.readSchemaFromFooter(footer, converter).json())
 
 
 def _normalize_event_ts(raw: "DataFrame"):
@@ -81,23 +133,28 @@ def _normalize_event_ts(raw: "DataFrame"):
     return F.col("ts").cast(T.TimestampType())
 
 
-_ROW_COUNT_CACHE: dict[str, int] = {}
+_ROW_COUNT_CACHE: dict[tuple[str, int, int], int] = {}
 
 
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of a testdata table, memoized per path for the process.
+    """Row count of a testdata table, memoized per file version.
 
     Operators gate explicit ``broadcast()`` hints on measured row counts
     (never on guesses); a parquet count-star is metadata-cheap but still a
     separate Spark job, so repeated builder invocations shouldn't re-pay
-    it. Testdata is immutable, which makes the cache safe here; a
-    production deployment over mutable tables would key this on a table
-    snapshot/version instead.
+    it. The memo keys on (realpath, size, mtime_ns), so a file replaced at
+    the same path is counted again; a path ``os.stat`` cannot see
+    (non-local storage, or missing) is counted every time.
     """
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    if path not in _ROW_COUNT_CACHE:
-        _ROW_COUNT_CACHE[path] = load_table(spark, sf_dir, name).count()
-    return _ROW_COUNT_CACHE[path]
+    path = os.path.realpath(os.path.join(sf_dir, f"{name}.parquet"))
+    try:
+        st = os.stat(path)
+    except OSError:
+        return load_table(spark, sf_dir, name).count()
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _ROW_COUNT_CACHE:
+        _ROW_COUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
+    return _ROW_COUNT_CACHE[key]
 
 
 # Inputs below this byte total can be under-parallel: a scan yields at

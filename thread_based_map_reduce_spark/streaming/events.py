@@ -19,12 +19,15 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..sources.registry import _footer_schema
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     # ``ts`` varies by testdata vintage: LongType (raw nanos surfaced by the
     # nanosAsLong read of TIMESTAMP(NANOS) parquet) or TimestampNTZType
     # (plain µs TIMESTAMP without timezone). The file source needs the
     # matching type declared up front; _events_stream picks it off the
-    # batch-read footer schema.
+    # file's footer schema.
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -72,6 +75,19 @@ def _staging_dir(sf_dir: str, table: str = "events") -> str:
     return stage
 
 
+def _stream_schema(spark: SparkSession, sf_dir: str, table: str = "events") -> T.StructType:
+    """Schema of the testdata file a staging dir links to, read from its
+    parquet footer on the driver, so starting a stream runs no
+    schema-inference Spark job. A table stored as a directory goes to
+    Spark's inference over the staging dir instead."""
+    import os
+
+    schema = _footer_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    if schema is None:
+        schema = spark.read.parquet(_staging_dir(sf_dir, table)).schema
+    return schema
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark's file stream source requires a *directory*; the testdata is a
     # single read-only file. Stage a symlink dir (the real deployment reads
@@ -79,12 +95,12 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _staging_dir(sf_dir)
 
     # Session-wide by necessity: micro-batches plan lazily after this
-    # function returns, so the conf cannot be save/restored here (unlike the
-    # batch path in sources/registry.load_table, which scopes it).
+    # function returns, so the conf cannot be passed per read here (unlike
+    # the batch path in sources/registry.load_table, which never sets it).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # One batch footer read decides the vintage; the normalization below
-    # mirrors sources/registry._normalize_event_ts for the stream lane.
-    ts_type = spark.read.parquet(stage).schema["ts"].dataType
+    # One footer read (under that flag) decides the vintage; the normalization
+    # below mirrors sources/registry._normalize_event_ts for the stream lane.
+    ts_type = _stream_schema(spark, sf_dir)["ts"].dataType
     raw = (
         spark.readStream.schema(_events_schema(ts_type))
         .option("maxFilesPerTrigger", 1)
@@ -376,7 +392,7 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import N_PERMS
 
     stage = _staging_dir(sf_dir, "documents")
-    schema = spark.read.parquet(stage).schema
+    schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -519,7 +535,7 @@ def quality_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import gopher_quality_impl
 
     stage = _staging_dir(sf_dir, "documents")
-    schema = spark.read.parquet(stage).schema
+    schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -540,7 +556,7 @@ def c4_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import c4_filters_impl
 
     stage = _staging_dir(sf_dir, "documents")
-    schema = spark.read.parquet(stage).schema
+    schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
