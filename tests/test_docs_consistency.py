@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -47,3 +48,30 @@ def test_package_env_vars_are_documented():
     with open("README.md") as fh:
         readme = fh.read()
     assert all(f"`{var}`" in readme for var in found), sorted(found)
+
+
+def test_scratch_dirs_and_exit_hooks_live_in_the_registry():
+    # One memo discipline: every scratch directory comes from
+    # sources.registry._scratch_dir, the only place that registers an
+    # interpreter-exit hook, so no module keeps its own temp-dir cache.
+    pkg = os.path.join(os.path.dirname(__file__), "..", "thread_based_map_reduce_spark")
+    calls = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            if rel == os.path.join("sources", "registry.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+                owner = getattr(getattr(fn, "value", None), "id", None)
+                if name == "mkdtemp" or (owner == "atexit" and name == "register"):
+                    calls.append(f"{rel}:{node.lineno} {name}")
+    assert not calls, calls

@@ -33,7 +33,7 @@ from ..functions.hashing import portable_hash64, portable_hash64_sql
 from ..functions.textfns import ngrams_of_tokens, tokens
 from ..plans.catalog import register
 from ..session import reliable_checkpoint
-from ..sources.registry import load_table, spread_small_scan
+from ..sources.registry import _input_memo, load_table, spread_small_scan
 
 # Production decontamination uses 8-13-token grams; the synthetic corpus
 # draws ~100 tokens/doc from a ~30-word vocabulary, so 3-grams (27k-point
@@ -1886,36 +1886,28 @@ def q_curation_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ABLATION_MAX_DUP_FRACTION = 0.5
 
-# Materialized per-doc flag table, computed ONCE per (session, sf_dir) and
-# checkpointed (VERDICT r11 #4 — the BASELINE-documented production shape):
-# funnel and ablation are both trivial aggregations over the same five
-# flag columns, so a deployment evaluates the filter machinery (including
-# the expensive exact-span coverage) exactly once and feeds every report
-# from the result. Keyed by applicationId so a new session never reads a
-# DataFrame owned by a stopped one; same memoization discipline as the
-# dedup signature store (_SIG_STORE_DIRS).
-import threading  # noqa: E402
-
-_FLAGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_FLAGS_LOCK = threading.Lock()
+# Materialized per-doc flag table, computed ONCE per session and input
+# version and checkpointed (VERDICT r11 #4 — the BASELINE-documented
+# production shape): funnel and ablation are both trivial aggregations over
+# the same five flag columns, so a deployment evaluates the filter
+# machinery (including the expensive exact-span coverage) exactly once and
+# feeds every report from the result. Memoized by
+# sources.registry._input_memo, so a new session never reads a DataFrame
+# owned by a stopped one and a replaced documents file is flagged again.
 
 
 def curation_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ntok, x_dedup, x_rep, x_qual, x_span, x_dec): the five
     curation filter fail-flags per document, composed from the catalog's
     own registered implementations, checkpointed, and memoized per
-    (session, sf_dir). 100 TB shape: this IS the production artifact — a
-    one-pass-per-filter evaluation written to the warehouse once, with
-    the funnel, the ablation, and any future report reading the flags
-    instead of re-deriving them (x_span alone costs a full exact-span
-    coverage evaluation)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _FLAGS_LOCK:
-        cached = _FLAGS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        from .dedup import span_coverage_impl
+    session and input version. 100 TB shape: this IS the production
+    artifact — a one-pass-per-filter evaluation written to the warehouse
+    once, with the funnel, the ablation, and any future report reading
+    the flags instead of re-deriving them (x_span alone costs a full
+    exact-span coverage evaluation)."""
+    from .dedup import span_coverage_impl
 
+    def build() -> DataFrame:
         # spread: every constituent below has a map-heavy doc-local front
         # (winnow hashing, gopher HOFs) that a one-row-group scan would
         # serialize; no-op at real scale
@@ -1949,7 +1941,7 @@ def curation_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus-sized flag tables: shuffle_hash pins (see
         # gopher_repetition_impl's assembly note — the unpinned
         # composition OOMed the 24g local JVM at the 500k-doc fixture)
-        flags = reliable_checkpoint(
+        return reliable_checkpoint(
             canon.join(rep.hint("shuffle_hash"), "doc_id")
             .join(qual.hint("shuffle_hash"), "doc_id")
             .join(cov.hint("shuffle_hash"), "doc_id", "left")
@@ -1964,8 +1956,8 @@ def curation_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("x_dec", F.lit(False)).alias("x_dec"),
             )
         )
-        _FLAGS_CACHE[key] = flags
-        return flags
+
+    return _input_memo(spark, sf_dir, "curation_doc_flags", build)
 
 
 def _flags_oracle_ctes() -> str:

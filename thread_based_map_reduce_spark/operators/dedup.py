@@ -48,6 +48,8 @@ from ..session import reliable_checkpoint
 from ..functions.vectors import dot_product, l2_norm
 from ..plans.catalog import register
 from ..sources.registry import (
+    _input_memo,
+    _scratch_dir,
     load_table,
     spread_small_scan,
     table_row_count,
@@ -267,54 +269,47 @@ def q_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LSH_SIG_BUCKETS = 32
-_LSH_SIGTBL_LOCK = threading.Lock()
-_LSH_SIGTBL_DIRS: dict[str, str] = {}
 
 
 def _bucketed_lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, mh0..mh7, ts) signature frame persisted ONCE per
-    sf_dir as a doc_id-BUCKETED, doc_id-sorted table (round-10 fix for
-    the r9 verify-join regression): the exact-Jaccard verify then rides
-    the bucketed-join machinery — a SortMergeJoin whose corpus-sized
-    signature side has ZERO Exchange and ZERO Sort; only the (sparse)
-    candidate side shuffles. This replaces the r9 shape that shuffled
-    the whole checkpointed tset table once per verify side, while
+    input version (``_input_memo``) as a doc_id-BUCKETED, doc_id-sorted
+    table (round-10 fix for the r9 verify-join regression): the
+    exact-Jaccard verify then rides the bucketed-join machinery — a
+    SortMergeJoin whose corpus-sized signature side has ZERO Exchange and
+    ZERO Sort; only the (sparse) candidate side shuffles. This replaces
+    the r9 shape that shuffled the whole checkpointed tset table once per
+    verify side, while
     keeping the plan corpus-broadcast-free (the r9 audit's invariant:
     a merge hint can never degrade to a broadcast). It is also the
     honest 100 TB layout: the signature store is written once at ingest,
     bucketed by doc_id, and every downstream verify/fetch is
     bucket-local. Parquet stats make the scan AQE-sizable — unlike the
     ExistingRDD checkpoint scans the r9 audit had to pin."""
-    import atexit
     import hashlib
     import os
-    import shutil
-    import tempfile
 
     from .layout import _one_file_per_bucket
 
-    real = os.path.realpath(sf_dir)
-    tag = hashlib.md5(real.encode()).hexdigest()[:8]
-    t_sig = f"tbmr_lsh_sig_{tag}"
-    with _LSH_SIGTBL_LOCK:
-        if real not in _LSH_SIGTBL_DIRS:
-            scratch = tempfile.mkdtemp(prefix="tbmr-lsh-sig-")
-            _LSH_SIGTBL_DIRS[real] = scratch
-            atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        scratch = _LSH_SIGTBL_DIRS[real]
-        if not spark.catalog.tableExists(t_sig):
-            combined = _signature_combined(
-                load_table(spark, sf_dir, "documents"), checkpoint=False
-            )
-            (
-                combined.repartition(_LSH_SIG_BUCKETS, F.col("doc_id"))
-                .write.bucketBy(_LSH_SIG_BUCKETS, "doc_id")
-                .sortBy("doc_id")
-                .option("path", f"{scratch}/signatures")
-                .mode("overwrite")
-                .saveAsTable(t_sig)
-            )
-            _one_file_per_bucket(f"{scratch}/signatures", _LSH_SIG_BUCKETS)
+    def build() -> str:
+        tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+        t_sig = f"tbmr_lsh_sig_{tag}"
+        scratch = _scratch_dir("tbmr-lsh-sig-")
+        combined = _signature_combined(
+            load_table(spark, sf_dir, "documents"), checkpoint=False
+        )
+        (
+            combined.repartition(_LSH_SIG_BUCKETS, F.col("doc_id"))
+            .write.bucketBy(_LSH_SIG_BUCKETS, "doc_id")
+            .sortBy("doc_id")
+            .option("path", f"{scratch}/signatures")
+            .mode("overwrite")
+            .saveAsTable(t_sig)
+        )
+        _one_file_per_bucket(f"{scratch}/signatures", _LSH_SIG_BUCKETS)
+        return t_sig
+
+    t_sig = _input_memo(spark, sf_dir, "lsh_signatures", build)
     # sound because every bucketed writer in this repo enforces the
     # at-most-one-file-per-bucket invariant at write time (layout.py)
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
@@ -504,13 +499,8 @@ def q_dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-(sf_dir) signature-store directory, memoized so repeated invocations
-# in long-lived sessions reuse one location (the write itself re-runs every
-# call in overwrite mode — the persistence round trip IS the point).
-_SIG_STORE_DIRS: dict[str, str] = {}
-
 # Serializes the store's build/append/compact cycle (ADVICE r7): three
-# catalog entries mutate the shared per-sf_dir directory, and compaction
+# catalog entries mutate the shared store directory, and compaction
 # set/restores session-wide partitionOverwriteMode — same shared-session
 # race class run_stream_to_memory's _RUN_STREAM_LOCK guards. Reentrant so
 # sigstore_append_compact can hold it across the whole three-step cycle.
@@ -629,8 +619,10 @@ def store_incremental_pairs(
 def build_signature_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the corpus signature store the minhash docstring promises.
 
-    Writes two parquet tables under a per-sf_dir staging dir and returns
-    its path:
+    Writes two parquet tables under a staging dir and returns its path.
+    The dir is reused per input version (``_input_memo``); the write itself
+    re-runs every call in overwrite mode — the persistence round trip IS
+    the point:
 
     - ``corpus_bands`` — (doc_id, x, y) partitioned BY BAND, so an ingest
       batch's per-band broadcast join prunes to the matching partition
@@ -643,16 +635,10 @@ def build_signature_store(spark: SparkSession, sf_dir: str) -> str:
     layout), and a periodic compaction rewrites each band partition to
     target file sizes. See SCALE.md "Incremental dedup signature store".
     """
-    import atexit
-    import shutil
-    import tempfile
-
     with _SIG_STORE_LOCK:
-        store = _SIG_STORE_DIRS.get(sf_dir)
-        if store is None:
-            store = tempfile.mkdtemp(prefix="tbmr-dedup-sigstore-")
-            _SIG_STORE_DIRS[sf_dir] = store
-            atexit.register(shutil.rmtree, store, ignore_errors=True)
+        store = _input_memo(
+            spark, sf_dir, "signature_store", lambda: _scratch_dir("tbmr-dedup-sigstore-")
+        )
         return _build_signature_store_locked(spark, sf_dir, store)
 
 
@@ -3374,10 +3360,6 @@ _RL_CAND_SQL = f"""norm AS (
         cand AS (SELECT * FROM tcand UNION SELECT * FROM ncand)"""
 
 
-_RL_CAND_LOCK = threading.Lock()
-_RL_CAND_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def _rl_blocked_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -3385,20 +3367,18 @@ def _rl_blocked_candidates(
     trigrams, and the multi-pass-blocked candidate pair set — the shared
     front half of ALL FOUR record-linkage entries (fixed-weight scoring,
     EM weights, EM pairs, threshold sweep). r12: checkpointed ONCE per
-    (session, sf_dir) and shared — the curation_doc_flags precedent
-    (VERDICT r11 #4) — instead of each entry re-running the normalize +
-    trigram + two-pass blocking pipeline (3 checkpoints each). Results
-    are frames over eagerly-materialized checkpoints, so sharing them
-    changes no values; a fresh process (every bench/oracle invocation)
-    always recomputes from parquet."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _RL_CAND_LOCK:
-        cached = _RL_CAND_CACHE.get(key)
-        if cached is not None:
-            return cached
-        result = _rl_blocked_candidates_uncached(spark, sf_dir)
-        _RL_CAND_CACHE[key] = result
-        return result
+    session and input version (``_input_memo``) and shared, like
+    curation_doc_flags (VERDICT r11 #4), instead of each entry re-running
+    the normalize + trigram + two-pass blocking pipeline (3 checkpoints
+    each). Results are frames over eagerly-materialized checkpoints, so
+    sharing them changes no values; a customer file replaced at the same
+    path is blocked again, never joined against stale candidates."""
+    return _input_memo(
+        spark,
+        sf_dir,
+        "rl_candidates",
+        lambda: _rl_blocked_candidates_uncached(spark, sf_dir),
+    )
 
 
 def _rl_blocked_candidates_uncached(

@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from ..plans.catalog import register
 from ..session import reliable_checkpoint
-from ..sources.registry import load_table
+from ..sources.registry import _input_memo, _scratch_dir, load_table
 
 ZQ_BITS = 4  # 16 cells per dimension
 ZQ_CELLS = 1 << ZQ_BITS
@@ -581,15 +581,6 @@ def q_hilbert_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BKT_N = 8  # bucket count; production sizes this to cluster parallelism
 
-# One bucketed copy of (orders, lineitem) per sf_dir, written once per
-# process into a mkdtemp scratch and registered as EXTERNAL tables in the
-# session catalog (explicit path option — nothing lands in
-# spark-warehouse/ under the caller's cwd). Cached like the dedup
-# signature store (dedup.py:590) so repeated calls reuse the layout.
-_BKT_LOCK = __import__("threading").Lock()
-_BKT_DIRS: dict[str, str] = {}
-
-
 def _one_file_per_bucket(path: str, n_buckets: int) -> None:
     """Guard the one-file-per-bucket invariant every bucketed writer in
     this repo must preserve: queries turn on
@@ -629,53 +620,49 @@ def _one_file_per_bucket(path: str, n_buckets: int) -> None:
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import atexit
+    """Names of one bucketed copy of (orders, lineitem), written into a
+    scratch dir and registered as EXTERNAL tables in the session catalog
+    (explicit path option — nothing lands in spark-warehouse/ under the
+    caller's cwd). Built once per session and input version
+    (``_input_memo``), like the dedup signature table, so repeated calls
+    reuse the layout."""
     import hashlib
     import os
-    import shutil
-    import tempfile
 
-    # normalize: trailing slashes / symlinked spellings of the same dir
-    # must share one bucketed copy, not silently duplicate it (ADVICE r9)
-    sf_dir = os.path.realpath(sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    t_orders = f"tbmr_bkt_orders_{tag}"
-    t_lineitem = f"tbmr_bkt_lineitem_{tag}"
-    with _BKT_LOCK:
-        if sf_dir not in _BKT_DIRS:
-            scratch = tempfile.mkdtemp(prefix="tbmr-bucketed-")
-            _BKT_DIRS[sf_dir] = scratch
-            atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        scratch = _BKT_DIRS[sf_dir]
-        if not spark.catalog.tableExists(t_orders):
-            (
-                load_table(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_orderpriority", "o_orderdate")
-                # one write task per bucket (repartition uses the same
-                # murmur3-mod hash family as bucketing) -> exactly ONE
-                # sorted file per bucket, which is what lets the reader
-                # drop the per-query Sort below the SortMergeJoin
-                .repartition(BKT_N, F.col("o_orderkey"))
-                .write.bucketBy(BKT_N, "o_orderkey")
-                .sortBy("o_orderkey")
-                .option("path", f"{scratch}/orders")
-                .mode("overwrite")
-                .saveAsTable(t_orders)
-            )
-            _one_file_per_bucket(f"{scratch}/orders", BKT_N)
-        if not spark.catalog.tableExists(t_lineitem):
-            (
-                load_table(spark, sf_dir, "lineitem")
-                .select("l_orderkey", "l_extendedprice", "l_discount")
-                .repartition(BKT_N, F.col("l_orderkey"))
-                .write.bucketBy(BKT_N, "l_orderkey")
-                .sortBy("l_orderkey")
-                .option("path", f"{scratch}/lineitem")
-                .mode("overwrite")
-                .saveAsTable(t_lineitem)
-            )
-            _one_file_per_bucket(f"{scratch}/lineitem", BKT_N)
-    return t_orders, t_lineitem
+    def build() -> tuple[str, str]:
+        tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+        t_orders = f"tbmr_bkt_orders_{tag}"
+        t_lineitem = f"tbmr_bkt_lineitem_{tag}"
+        scratch = _scratch_dir("tbmr-bucketed-")
+        (
+            load_table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_orderpriority", "o_orderdate")
+            # one write task per bucket (repartition uses the same
+            # murmur3-mod hash family as bucketing) -> exactly ONE
+            # sorted file per bucket, which is what lets the reader
+            # drop the per-query Sort below the SortMergeJoin
+            .repartition(BKT_N, F.col("o_orderkey"))
+            .write.bucketBy(BKT_N, "o_orderkey")
+            .sortBy("o_orderkey")
+            .option("path", f"{scratch}/orders")
+            .mode("overwrite")
+            .saveAsTable(t_orders)
+        )
+        _one_file_per_bucket(f"{scratch}/orders", BKT_N)
+        (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_extendedprice", "l_discount")
+            .repartition(BKT_N, F.col("l_orderkey"))
+            .write.bucketBy(BKT_N, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", f"{scratch}/lineitem")
+            .mode("overwrite")
+            .saveAsTable(t_lineitem)
+        )
+        _one_file_per_bucket(f"{scratch}/lineitem", BKT_N)
+        return t_orders, t_lineitem
+
+    return _input_memo(spark, sf_dir, "bucketed_tables", build)
 
 
 @register(

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.catalog import register
-from ..sources.registry import load_table
+from ..sources.registry import _scratch_dir, load_table
 from ..streaming.events import (
     _events_stream,
     run_stream_to_memory,
@@ -174,12 +174,7 @@ def q_streaming_dedup_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "runtime", "sink"),
 )
 def q_streaming_upsert_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
-    target = tempfile.mkdtemp(prefix="tbmr-upsert-runtime-")
-    atexit.register(shutil.rmtree, target, ignore_errors=True)
+    target = _scratch_dir("tbmr-upsert-runtime-")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (

@@ -10,7 +10,11 @@ marshalling, and ``from_rows`` as the literal ``InputVec`` equivalent.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
@@ -133,28 +137,67 @@ def _normalize_event_ts(raw: "DataFrame"):
     return F.col("ts").cast(T.TimestampType())
 
 
-_ROW_COUNT_CACHE: dict[tuple[str, int, int], int] = {}
+# The one memo of derived artifacts of an input directory (row counts,
+# bucketed and signature tables, checkpointed frames, scratch dirs), so
+# every builder shares one rule for when an artifact may be reused.
+# Reentrant: builds nest (the curation flag build calls other builders).
+_MEMO_LOCK = threading.RLock()
+_MEMO: dict[tuple[str, str, str], tuple[tuple, object]] = {}
+
+
+def _input_version(sf_dir: str) -> tuple | None:
+    """(entry name, inode, size, mtime_ns) of every entry in ``sf_dir``,
+    one level deep and following symlinks; ``None`` when the directory (or
+    one of its entries) cannot be read. The whole directory counts, so no
+    builder has to list the tables it reads."""
+    try:
+        with os.scandir(sf_dir) as it:
+            stats = [(e.name, e.stat()) for e in it]
+    except OSError:
+        return None
+    return tuple(sorted((n, st.st_ino, st.st_size, st.st_mtime_ns) for n, st in stats))
+
+
+def _input_memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()``'s result, computed at most once per (session,
+    ``realpath(sf_dir)``, ``name``) and input version (see
+    ``_input_version``). A file replaced at the same path, a new session,
+    or another spelling of the same directory is never served the wrong
+    artifact: a changed version rebuilds and replaces the entry. A
+    directory that cannot be read is not memoized."""
+    real = os.path.realpath(sf_dir)
+    key = (spark.sparkContext.applicationId, real, name)
+    with _MEMO_LOCK:
+        version = _input_version(real)
+        if version is None:
+            return build()
+        hit = _MEMO.get(key)
+        if hit is not None and hit[0] == version:
+            return hit[1]
+        value = build()
+        _MEMO[key] = (version, value)
+        return value
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed at interpreter exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of a testdata table, memoized per file version.
+    """Row count of a testdata table, memoized per input version.
 
     Operators gate explicit ``broadcast()`` hints on measured row counts
     (never on guesses); a parquet count-star is metadata-cheap but still a
     separate Spark job, so repeated builder invocations shouldn't re-pay
-    it. The memo keys on (realpath, size, mtime_ns), so a file replaced at
-    the same path is counted again; a path ``os.stat`` cannot see
-    (non-local storage, or missing) is counted every time.
+    it (``_input_memo``: a file replaced at the same path is counted
+    again).
     """
-    path = os.path.realpath(os.path.join(sf_dir, f"{name}.parquet"))
-    try:
-        st = os.stat(path)
-    except OSError:
-        return load_table(spark, sf_dir, name).count()
-    key = (path, st.st_size, st.st_mtime_ns)
-    if key not in _ROW_COUNT_CACHE:
-        _ROW_COUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
-    return _ROW_COUNT_CACHE[key]
+    return _input_memo(
+        spark, sf_dir, f"row_count:{name}", lambda: load_table(spark, sf_dir, name).count()
+    )
 
 
 # Inputs below this byte total can be under-parallel: a scan yields at

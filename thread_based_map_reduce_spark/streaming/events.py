@@ -19,7 +19,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..sources.registry import _footer_schema
+from ..sources.registry import _footer_schema, _input_memo, _scratch_dir
 
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
@@ -40,8 +40,6 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-_STAGE_DIRS: dict[str, str] = {}
-
 # Inactivity TTL for the timer/expiry runtime: a user's state finalizes
 # when the watermark passes last_event + this gap (epoch-ms units, the
 # GroupState.setTimeoutTimestamp contract).
@@ -52,27 +50,21 @@ TTL_GAP_MS = 10 * 60 * 1000
 _RUN_STREAM_LOCK = threading.Lock()
 
 
-def _staging_dir(sf_dir: str, table: str = "events") -> str:
-    """One symlink staging dir per (sf_dir, table), reused across calls
-    (repeated invocations in long-lived sessions/tests must not leak a
-    fresh mkdtemp each time); removed at interpreter exit."""
-    import atexit
+def _staging_dir(spark: SparkSession, sf_dir: str, table: str = "events") -> str:
+    """One symlink staging dir per (sf_dir, table), reused per session and
+    input version (``_input_memo``): repeated invocations in long-lived
+    sessions/tests must not leak a fresh scratch dir each time."""
     import os
-    import shutil
-    import tempfile
 
-    key = f"{sf_dir}::{table}"
-    stage = _STAGE_DIRS.get(key)
-    if stage is not None and os.path.isdir(stage):
+    def build() -> str:
+        stage = _scratch_dir(f"tbmr-{table}-stream-")
+        os.symlink(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            os.path.join(stage, f"{table}.parquet"),
+        )
         return stage
-    stage = tempfile.mkdtemp(prefix=f"tbmr-{table}-stream-")
-    os.symlink(
-        os.path.join(sf_dir, f"{table}.parquet"),
-        os.path.join(stage, f"{table}.parquet"),
-    )
-    _STAGE_DIRS[key] = stage
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    return stage
+
+    return _input_memo(spark, sf_dir, f"stage:{table}", build)
 
 
 def _stream_schema(spark: SparkSession, sf_dir: str, table: str = "events") -> T.StructType:
@@ -84,7 +76,7 @@ def _stream_schema(spark: SparkSession, sf_dir: str, table: str = "events") -> T
 
     schema = _footer_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
     if schema is None:
-        schema = spark.read.parquet(_staging_dir(sf_dir, table)).schema
+        schema = spark.read.parquet(_staging_dir(spark, sf_dir, table)).schema
     return schema
 
 
@@ -92,7 +84,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark's file stream source requires a *directory*; the testdata is a
     # single read-only file. Stage a symlink dir (the real deployment reads
     # a landing directory or Kafka anyway).
-    stage = _staging_dir(sf_dir)
+    stage = _staging_dir(spark, sf_dir)
 
     # Session-wide by necessity: micro-batches plan lazily after this
     # function returns, so the conf cannot be passed per read here (unlike
@@ -391,7 +383,7 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import ngrams_of_tokens, tokens
     from ..operators.dedup import N_PERMS
 
-    stage = _staging_dir(sf_dir, "documents")
+    stage = _staging_dir(spark, sf_dir, "documents")
     schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
@@ -534,7 +526,7 @@ def quality_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no watermark (nothing can be late for a stateless map)."""
     from ..operators.text import gopher_quality_impl
 
-    stage = _staging_dir(sf_dir, "documents")
+    stage = _staging_dir(spark, sf_dir, "documents")
     schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
@@ -555,7 +547,7 @@ def c4_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     map."""
     from ..operators.curation import c4_filters_impl
 
-    stage = _staging_dir(sf_dir, "documents")
+    stage = _staging_dir(spark, sf_dir, "documents")
     schema = _stream_schema(spark, sf_dir, "documents")
     raw = (
         spark.readStream.schema(schema)
