@@ -75,3 +75,37 @@ def test_scratch_dirs_and_exit_hooks_live_in_the_registry():
                 if name == "mkdtemp" or (owner == "atexit" and name == "register"):
                     calls.append(f"{rel}:{node.lineno} {name}")
     assert not calls, calls
+
+
+def test_minhash_lsh_kernel_is_defined_once():
+    # One near-dup algorithm: the oracle banding, the in-bucket pair
+    # expansion and the MinHash permutation call each live in one place
+    # (operators/dedup.py's kernel), so no entry can drift from the others.
+    pkg = os.path.join(os.path.dirname(__file__), "..", "thread_based_map_reduce_spark")
+    sources = {}
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    sources[os.path.relpath(path, pkg)] = fh.read()
+    for text in ("UNION ALL SELECT doc_id, 1, mh2, mh3", "transform(slice(ids, i + 2"):
+        where = {rel: src.count(text) for rel, src in sources.items() if text in src}
+        assert sum(where.values()) == 1, (text, where)
+    dedup = os.path.join("operators", "dedup.py")
+    kernel = next(
+        node
+        for node in ast.parse(sources[dedup]).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_signature_combined"
+    )
+    stray = []
+    for rel, src in sources.items():
+        if not rel.startswith("operators") or rel.endswith("engineering.py"):
+            continue
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if "minhash_perm(" not in line:
+                continue
+            if rel == dedup and kernel.lineno <= lineno <= kernel.end_lineno:
+                continue
+            stray.append(f"{rel}:{lineno}")
+    assert not stray, stray

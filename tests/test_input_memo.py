@@ -67,6 +67,16 @@ def test_same_size_replace_rebuilds_and_keeps_one_entry(tmp_path):
     assert [k for k in registry._MEMO if k[1] == real] == [("app-1", real, "t")]
 
 
+def test_stopped_sessions_entries_are_dropped(tmp_path):
+    # a process has one live SparkContext: entries of earlier
+    # applicationIds can never be hit again
+    d, build = _inputs(tmp_path), _builds()
+    for app in ("app-1", "app-2", "app-3"):
+        registry._input_memo(_session(app), str(d), "t", build)
+    real = os.path.realpath(d)
+    assert [k for k in registry._MEMO if k[1] == real] == [("app-3", real, "t")]
+
+
 def test_unreadable_directory_builds_every_call(tmp_path):
     build = _builds()
     missing = str(tmp_path / "missing")

@@ -854,6 +854,30 @@ def test_filter_blowup_sweep_all_plans(spark, sf_dir):
     )
 
 
+def test_filter_blowup_sweep_stream_plans(spark, sf_dir):
+    # The catalog sweep above sees only the memory-sink plans of the
+    # streaming runtime entries, so the stream builders' own plans are
+    # swept here (a shingle-array filter in minhash_dedup_stream once put
+    # split x3 and transform x2 into one Filter condition).
+    from thread_based_map_reduce_spark.streaming import events
+
+    builders = sorted(
+        n for n in dir(events) if n.endswith("_stream") and not n.startswith("_")
+    )
+    assert "minhash_dedup_stream" in builders
+    offenders = {}
+    for name in builders:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            getattr(events, name)(spark, sf_dir).explain("formatted")
+        hits = repeated_expensive_filter_fns(buf.getvalue())
+        if hits:
+            offenders[name] = hits
+    assert not offenders, (
+        f"expensive expression inlined >= 2x into a stream's Filter: {offenders}"
+    )
+
+
 @pytest.mark.parametrize("name", ["dedup_embedding_lsh", "dedup_embedding_cosine"])
 def test_cosine_verify_dot_is_staged(spark, sf_dir, name):
     # The verify stage projects the 64-element dot product ONCE as _dot and

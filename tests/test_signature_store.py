@@ -1,14 +1,21 @@
 """Incremental-dedup signature store: layout and round-trip contracts
-beyond the catalog oracle (which gates the VALUES end-to-end)."""
+beyond the catalog oracle (which gates the VALUES end-to-end), and the
+short-document contract of the signature it stores."""
 
 from __future__ import annotations
 
 import os
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from thread_based_map_reduce_spark.operators.dedup import (
     N_BANDS,
+    N_PERMS,
+    _minhash_sig_sql,
+    _signature_combined,
     build_signature_store,
 )
 from thread_based_map_reduce_spark.plans.catalog import CATALOG
@@ -78,3 +85,26 @@ def test_append_then_compact_reduces_files_and_preserves_rows(spark, sf_dir):
     ).parquet(f"{store}/corpus_bands")
     assert after.count() == appended_rows  # layout rewrite, not a data change
     assert after.select("doc_id", "x", "y", "band").distinct().count() == appended_rows
+
+
+def test_only_docs_with_a_trigram_get_a_signature(spark, tmp_path):
+    # The per-row signature keeps a doc by its token count; documents of
+    # 0-2 tokens, whitespace-only and NULL text have no trigram and no row,
+    # exactly as in the oracle's GROUP BY over exploded shingles.
+    texts = {1: "", 2: "alpha", 3: "alpha beta", 4: "alpha  beta gamma", 5: "   ", 6: None}
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(list(texts), pa.int64()),
+                "text": pa.array(list(texts.values()), pa.string()),
+            }
+        ),
+        path,
+    )
+    rows = _signature_combined(spark.read.parquet(str(path)), checkpoint=False).collect()
+    assert [r.doc_id for r in rows] == [4]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    oracle = con.execute(f"WITH {_minhash_sig_sql()} SELECT * FROM sig").fetchall()
+    assert oracle == [(4, *[rows[0][f"mh{i}"] for i in range(N_PERMS)])]

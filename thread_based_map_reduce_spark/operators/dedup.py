@@ -83,50 +83,67 @@ _HASHED_SQL = f"""
 
 
 def _minhash_sig_sql() -> str:
+    """The ``shingles`` → ``hashed`` → ``sig(doc_id, mh0..)`` CTEs. The
+    oracles keep the GROUP BY min form: they are the independent check
+    of _signature_combined's per-row arrays."""
     perms = ",\n            ".join(
         f"CAST(min(({a} * h + {b}) % {MINHASH_PRIME}) AS BIGINT) AS mh{i}"
         for i, (a, b) in enumerate(MINHASH_PARAMS[:N_PERMS])
     )
-    return f"""
-    sig AS (
-        SELECT doc_id,
+    return f"""{_SHINGLES_SQL.strip()},
+        {_HASHED_SQL.strip()},
+        sig AS (
+            SELECT doc_id,
             {perms}
-        FROM hashed
-        GROUP BY doc_id
-    )"""
+            FROM hashed
+            GROUP BY doc_id
+        )"""
 
 
-def _verified_pairs_sql() -> str:
-    """The standard band→candidate→exact-Jaccard-verify chain ending in
-    ``vpairs(doc_a, doc_b, jacc)`` (unrounded). ONE definition shared by
-    dedup_minhash_lsh_pairs and dup_pairs_edit_distance (the same
-    shared-SQL convention as _QUALITY_SQL)."""
-    return f"""
-        bands AS (
+# The oracle pieces of the MinHash-LSH kernel, one definition each: the
+# banding of sig, the bucket-collision candidates, the per-doc 60-bit
+# shingle-hash sets, and the exact Jaccard of a pair joined to its sets as
+# ``tsets a`` and ``tsets b``.
+_BANDS_SQL = """bands AS (
             SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
             UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
             UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
             UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
+        )"""
+
+_CAND_SQL = """cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM bands a
             JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
                         AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
+        )"""
+
+_TSETS_SQL = f"""tsets AS (
             SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
             FROM shingles GROUP BY doc_id
-        ),
+        )"""
+
+_JACC_SQL = (
+    "len(list_intersect(a.ts, b.ts))::DOUBLE"
+    " / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts)))"
+)
+
+
+def _verified_pairs_sql() -> str:
+    """The whole oracle chain ``shingles`` → ``hashed`` → ``sig`` →
+    ``bands`` → ``cand`` → ``tsets`` → ``vpairs(doc_a, doc_b, jacc)``
+    (jacc unrounded). ONE definition composed by every MinHash-LSH
+    oracle (the same shared-SQL convention as _QUALITY_SQL)."""
+    return f"""{_minhash_sig_sql()},
+        {_BANDS_SQL},
+        {_CAND_SQL},
+        {_TSETS_SQL},
         vpairs AS (
-            SELECT doc_a, doc_b,
-                   len(list_intersect(a.ts, b.ts))::DOUBLE
-                   / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) AS jacc
+            SELECT doc_a, doc_b, {_JACC_SQL} AS jacc
             FROM cand
             JOIN tsets a ON a.doc_id = doc_a
             JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
+            WHERE {_JACC_SQL} >= {JACCARD_THRESHOLD}
         )"""
 
 
@@ -187,22 +204,122 @@ def _ranked_members(
     )
 
 
-def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id → 8 minhash columns, over distinct word-trigram shingles."""
-    docs = load_table(spark, sf_dir, "documents")
-    # tokenize ONCE into a column; building n-grams straight off text would
-    # re-split the text per lambda evaluation (see ngrams_of_tokens)
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
+# -- the MinHash-LSH kernel --------------------------------------------------
+#
+# Every near-dup entry, batch and stream, composes these pieces, so the
+# algorithm (word-trigram shingles, the N_PERMS-permutation MinHash,
+# N_BANDS bands of two, the exact-Jaccard verify) is defined once:
+# _signature_combined → _bands_of_combined → _lsh_candidates (bucket
+# groupBy + _bucket_pairs) → _jaccard_verified. _verified_pairs_sql is the
+# DuckDB twin the oracles compose.
+
+
+def _signature_combined(docs: DataFrame, *, checkpoint: bool = True) -> DataFrame:
+    """(doc_id, mh0..mh{N_PERMS-1}, ts) for every document with at least
+    one trigram, computed per row: ``ts`` is the distinct 60-bit shingle
+    hashes, ``mh{i}`` the min of permutation i over them. No explode and
+    no groupBy, so the same builder runs inside a stateless stream.
+
+    The text is tokenized ONCE into a column, and rows are kept on the
+    token count (>= 3 tokens ⟺ >= 1 trigram; NULL text has none). Never
+    filter on the shingle array itself: Catalyst pushes the filter below
+    the projection and substitutes the whole shingle pipeline into the
+    condition, re-splitting the text per n-gram (measured 77 s vs 0.7 s
+    on a 22k-token row, warm local[4] session). Callers select the
+    columns they need; pruning drops the rest. checkpoint=False for
+    callers that persist the frame themselves or run it in a stream."""
+    toks = docs.select("doc_id", tokens("text").alias("toks")).where(
+        F.size("toks") >= 3
+    )
     hashed = toks.select(
         "doc_id",
-        F.explode(F.array_distinct(ngrams_of_tokens(F.col("toks"), 3))).alias("s"),
-    ).select("doc_id", (portable_hash64("s") % MINHASH_PRIME).alias("h"))
-    return hashed.groupBy("doc_id").agg(
+        F.array_distinct(
+            F.transform(ngrams_of_tokens(F.col("toks"), 3), portable_hash64)
+        ).alias("ts"),
+    )
+    out = hashed.select(
+        "doc_id",
         *[
-            F.min(minhash_perm(F.col("h"), i)).cast("bigint").alias(f"mh{i}")
+            F.array_min(F.transform("ts", lambda h: minhash_perm(h, i)))
+            .cast("bigint")
+            .alias(f"mh{i}")
             for i in range(N_PERMS)
+        ],
+        "ts",
+    )
+    return reliable_checkpoint(out) if checkpoint else out
+
+
+def _bands_of_combined(combined: DataFrame) -> DataFrame:
+    """(doc_id, band, x, y): the banding explode of a _signature_combined
+    table — each band keys on two adjacent minhash values. One explode,
+    not a union of N_BANDS selects (which would re-run the signature
+    pipeline once per band)."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.col(f"mh{2 * b}").alias("x"),
+                F.col(f"mh{2 * b + 1}").alias("y"),
+            )
+            for b in range(N_BANDS)
         ]
     )
+    return combined.select("doc_id", F.explode(band_structs).alias("b")).select(
+        "doc_id", "b.band", "b.x", "b.y"
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+    """(a, b) with a < b for every pair inside each row's sorted ``ids``
+    array: the bucket-local expansion, O(bucket²) per bucket and never a
+    global self-join. Not distinct: a pair sharing k buckets appears k
+    times."""
+    return (
+        buckets.where(F.size("ids") >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (x, i) -> "
+                    "transform(slice(ids, i + 2, size(ids)), y -> "
+                    f"struct(x AS {a}, y AS {b}))))"
+                )
+            ).alias("p")
+        )
+        .select(f"p.{a}", f"p.{b}")
+    )
+
+
+def _lsh_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a band bucket: docs group on
+    (band, x, y) and pairs expand inside each bucket's sorted id array —
+    buckets hold near-dups only, so this is never an O(n²) stage, and
+    never a self-join (which would shuffle both sides)."""
+    buckets = _bands_of_combined(sig).groupBy("band", "x", "y").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
+    )
+    return _bucket_pairs(buckets).distinct()
+
+
+def _jaccard_verified(
+    joined: DataFrame, keys: list[str], threshold: float | None = JACCARD_THRESHOLD
+) -> DataFrame:
+    """(*keys, jaccard): pairs already joined to their two shingle-hash
+    arrays ``ts_a``/``ts_b``, kept where the exact Jaccard reaches
+    ``threshold`` (all of them when None), rounded to 6 places. The
+    intersect size is projected ONCE and the filter reads the scalar: a
+    Jaccard expression in both where and select evaluates array_intersect
+    per reference (measured ~2x on the verify stage)."""
+    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
+    sized = joined.select(
+        *keys,
+        F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
+        F.size("ts_a").alias("_na"),
+        F.size("ts_b").alias("_nb"),
+    )
+    if threshold is not None:
+        sized = sized.where(jac >= threshold)
+    return sized.select(*keys, F.round(jac, 6).alias("jaccard"))
 
 
 # -- exact dedup -------------------------------------------------------------
@@ -237,9 +354,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_signatures",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()}
+        WITH {_minhash_sig_sql()}
         SELECT * FROM sig
     """,
     doc="8-permutation MinHash signatures over distinct word-trigram shingles "
@@ -247,16 +362,14 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "minhash"),
 )
 def q_dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_signatures(spark, sf_dir)
+    sig = _signature_combined(load_table(spark, sf_dir, "documents"), checkpoint=False)
+    return sig.select("doc_id", *[f"mh{i}" for i in range(N_PERMS)])
 
 
 @register(
     "dedup_minhash_lsh_pairs",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()}
+        WITH {_verified_pairs_sql()}
         SELECT doc_a, doc_b, round(jacc, 6) AS jaccard FROM vpairs
     """,
     doc="Near-dup pairs via MinHash LSH: 4 bands x 2 rows -> bucket join -> "
@@ -318,57 +431,11 @@ def _bucketed_lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) near-dup pairs via banded MinHash LSH +
-    exact-Jaccard verify. Shared by the pairs query and the clustering
-    query."""
-    # ONE shingle pass: a single groupBy computes the minhash signature AND
-    # the distinct shingle-hash set per doc, persisted as the doc_id-
-    # bucketed signature table so banding and BOTH verify sides read the
-    # result instead of re-running tokenize→shingle→hash — and the verify
-    # joins are bucket-local (no corpus shuffle, see
-    # _bucketed_lsh_signatures). At 100 TB this is the persisted
-    # signature table the incremental path reads too.
+    exact-Jaccard verify, over the doc_id-bucketed signature table (ONE
+    signature pass per input version; banding and both verify sides read
+    the persisted result, see _bucketed_lsh_signatures)."""
     combined = _bucketed_lsh_signatures(spark, sf_dir)
-    sig = combined
-    # Stack the signature into one narrow (doc_id, band, x, y) row per band
-    # with a single explode — NOT a 4-way union (which would re-run the whole
-    # shingle→hash→min pipeline once per band), and generate candidate pairs
-    # bucket-locally with groupBy + array expansion — NOT a self-join (which
-    # would run the pipeline twice more and shuffle both sides).
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"mh{2 * b}").alias("x"),
-                F.col(f"mh{2 * b + 1}").alias("y"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", "b.band", "b.x", "b.y"
-    )
-    # bucket-join: docs sharing a (band, x, y) bucket are candidates; pair
-    # expansion happens inside each bucket's sorted id array (buckets are
-    # tiny — near-dups only — so the expansion is O(bucket²) locally, never
-    # a global O(n²) stage)
-    buckets = (
-        bands.groupBy("band", "x", "y")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), b -> "
-                    "struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    cand = _lsh_candidates(combined)
     # MERGE, not broadcast and not shuffle-hash, for the verify fetch
     # (round 10, superseding the r9 shuffle-hash pin): the signature side
     # is the doc_id-bucketed table, so the SortMergeJoin consumes its scan
@@ -378,23 +445,7 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tsets = combined.select("doc_id", "ts").hint("merge")
     ta = tsets.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ts_a"))
     tb = tsets.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("ts_b"))
-    # project the intersect size once, then filter on the scalar — a jac
-    # expression in both where and select evaluates array_intersect per
-    # reference (see jaccard_blocked_pairs; measured ~2x there)
-    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
-            F.size("ts_a").alias("_na"),
-            F.size("ts_b").alias("_nb"),
-        )
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_verified(cand.join(ta, "doc_a").join(tb, "doc_b"), ["doc_a", "doc_b"])
 
 
 # -- incremental near-dup: new batch vs existing corpus -----------------------
@@ -405,33 +456,20 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checks both — the e2e entry's parquet round trip is value-preserving by
 # contract.
 _INCREMENTAL_ORACLE = f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
+        WITH {_minhash_sig_sql()},
+        {_BANDS_SQL},
         cand AS (
             SELECT DISTINCT c.doc_id AS doc_corpus, n.doc_id AS doc_new
             FROM bands c
             JOIN bands n ON c.band = n.band AND c.x = n.x AND c.y = n.y
             WHERE c.doc_id % 10 <> 0 AND n.doc_id % 10 = 0
         ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        )
-        SELECT doc_corpus, doc_new,
-               round(len(list_intersect(a.ts, b.ts))::DOUBLE
-                     / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))), 6) AS jaccard
+        {_TSETS_SQL}
+        SELECT doc_corpus, doc_new, round({_JACC_SQL}, 6) AS jaccard
         FROM cand
         JOIN tsets a ON a.doc_id = doc_corpus
         JOIN tsets b ON b.doc_id = doc_new
-        WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
+        WHERE {_JACC_SQL} >= {JACCARD_THRESHOLD}
     """
 
 
@@ -446,56 +484,15 @@ _INCREMENTAL_ORACLE = f"""
     tags=("dedup", "minhash", "lsh", "incremental"),
 )
 def q_dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _minhash_signatures(spark, sf_dir)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"mh{2 * b}").alias("x"),
-                F.col(f"mh{2 * b + 1}").alias("y"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", "b.band", "b.x", "b.y"
-    )
+    # the store path's join over an in-plan corpus/new split (the same
+    # from-scratch side tests/test_incremental_multiday.py checks)
+    docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 0
-    corpus = bands.where(~is_new).select(
-        F.col("doc_id").alias("doc_corpus"), "band", "x", "y"
-    )
-    new = bands.where(is_new).select(F.col("doc_id").alias("doc_new"), "band", "x", "y")
-    # the arriving batch is the small side — broadcast it against the
-    # (at scale: materialized, bucketed) corpus band table
-    cand = corpus.join(F.broadcast(new), ["band", "x", "y"]).select(
-        "doc_corpus", "doc_new"
-    ).distinct()
-    tsets = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", tokens("text").alias("toks"))
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(ngrams_of_tokens(F.col("toks"), 3), lambda s: portable_hash64(s))
-            ).alias("ts"),
-        )
-    )
-    ta = tsets.select(F.col("doc_id").alias("doc_corpus"), F.col("ts").alias("ts_a"))
-    tb = tsets.select(F.col("doc_id").alias("doc_new"), F.col("ts").alias("ts_b"))
-    # single-evaluation intersect, as in jaccard_blocked_pairs
-    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (
-        cand.join(ta, "doc_corpus")
-        .join(F.broadcast(tb), "doc_new")
-        .select(
-            "doc_corpus",
-            "doc_new",
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
-            F.size("ts_a").alias("_na"),
-            F.size("ts_b").alias("_nb"),
-        )
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_corpus", "doc_new", F.round(jac, 6).alias("jaccard"))
+    corpus = _signature_combined(docs.where(~is_new), checkpoint=False)
+    return store_incremental_pairs(
+        _bands_of_combined(corpus),
+        corpus.select("doc_id", "ts"),
+        _signature_combined(docs.where(is_new), checkpoint=False),
     )
 
 
@@ -505,50 +502,6 @@ def q_dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # race class run_stream_to_memory's _RUN_STREAM_LOCK guards. Reentrant so
 # sigstore_append_compact can hold it across the whole three-step cycle.
 _SIG_STORE_LOCK = threading.RLock()
-
-
-def _signature_combined(docs: DataFrame, *, checkpoint: bool = True) -> DataFrame:
-    """(doc_id, mh0..mh{N_PERMS-1}, ts): ONE grouped pass computing the
-    minhash signature AND the distinct shingle-hash set (the
-    _lsh_verified_pairs discipline) — shared by the store build, the
-    append path, the e2e batch side, the multi-day equivalence test, and
-    the bucketed signature table, so every consumer agrees on the
-    signature definition by construction. checkpoint=False for callers
-    that immediately persist the frame themselves (the bucketed table
-    write) — a checkpoint right before a write would materialize twice."""
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    h60 = toks.select(
-        "doc_id",
-        F.explode(F.array_distinct(ngrams_of_tokens(F.col("toks"), 3))).alias("s"),
-    ).select("doc_id", portable_hash64("s").alias("h60"))
-    out = h60.groupBy("doc_id").agg(
-        *[
-            F.min(minhash_perm(F.col("h60") % MINHASH_PRIME, i))
-            .cast("bigint")
-            .alias(f"mh{i}")
-            for i in range(N_PERMS)
-        ],
-        F.collect_set("h60").alias("ts"),
-    )
-    return reliable_checkpoint(out) if checkpoint else out
-
-
-def _bands_of_combined(combined: DataFrame) -> DataFrame:
-    """(doc_id, band, x, y): the banding explode of a _signature_combined
-    table — each band keys on two adjacent minhash values."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"mh{2 * b}").alias("x"),
-                F.col(f"mh{2 * b + 1}").alias("y"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return combined.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", "b.band", "b.x", "b.y"
-    )
 
 
 def write_store_tables(
@@ -600,19 +553,9 @@ def store_incremental_pairs(
         F.col("doc_id").alias("doc_corpus"), F.col("ts").alias("ts_a")
     )
     tb = new_combined.select(F.col("doc_id").alias("doc_new"), F.col("ts").alias("ts_b"))
-    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (
-        cand.join(ta, "doc_corpus")
-        .join(F.broadcast(tb), "doc_new")
-        .select(
-            "doc_corpus",
-            "doc_new",
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
-            F.size("ts_a").alias("_na"),
-            F.size("ts_b").alias("_nb"),
-        )
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_corpus", "doc_new", F.round(jac, 6).alias("jaccard"))
+    return _jaccard_verified(
+        cand.join(ta, "doc_corpus").join(F.broadcast(tb), "doc_new"),
+        ["doc_corpus", "doc_new"],
     )
 
 
@@ -682,33 +625,8 @@ def q_dedup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_id of its connected component — so one recursive-CTE transitive
 # closure checks either physical strategy.
 _CLUSTERS_ORACLE = f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
-        ),
+        WITH RECURSIVE {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -1051,24 +969,10 @@ def jaccard_blocked_pairs(
     )
     ta = tsets.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ts_a"))
     tb = tsets.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("ts_b"))
-    # array_intersect is the hot operator; referencing a jaccard expression
-    # in BOTH the filter and the projection would evaluate it (and the
-    # intersect inside it) up to 4x per pair — project the intersect size
-    # ONCE, then filter/project on the scalar (measured ~2x on the verify
-    # stage at 5k docs/block).
-    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (
-        pairs.join(_hint_small(ta, n_docs), "doc_a")
-        .join(_hint_small(tb, n_docs), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
-            F.size("ts_a").alias("_na"),
-            F.size("ts_b").alias("_nb"),
-        )
-        .where(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return _jaccard_verified(
+        pairs.join(_hint_small(ta, n_docs), "doc_a").join(_hint_small(tb, n_docs), "doc_b"),
+        ["doc_a", "doc_b"],
+        threshold,
     )
 
 
@@ -1087,13 +991,10 @@ def jaccard_blocked_oracle_sql(threshold: float = 0.8, max_block: int = JACCARD_
                          list_filter(string_split(text, ' '), t -> t <> '') AS w
                   FROM documents JOIN kept USING (lang))
         )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               round(len(list_intersect(a.ts, b.ts))::DOUBLE
-                     / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))), 6) AS jaccard
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, round({_JACC_SQL}, 6) AS jaccard
         FROM tsets a
         JOIN tsets b ON a.lang = b.lang AND b.doc_id > a.doc_id
-        WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {threshold}
+        WHERE {_JACC_SQL} >= {threshold}
     """
 
 
@@ -1205,33 +1106,8 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_keep_best",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
-        ),
+        WITH RECURSIVE {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -1275,34 +1151,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_canonical_map",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts)))
-                  >= {JACCARD_THRESHOLD}
-        ),
+        WITH RECURSIVE {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -1367,30 +1217,14 @@ def q_dedup_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_estimate_eval",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        )
+        WITH {_minhash_sig_sql()},
+        {_BANDS_SQL},
+        {_CAND_SQL},
+        {_TSETS_SQL}
         SELECT doc_a, doc_b,
                round(({" + ".join(f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(N_PERMS))})
                      / {N_PERMS}.0, 6) AS est_jaccard,
-               round(len(list_intersect(a.ts, b.ts))::DOUBLE
-                     / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))), 6) AS true_jaccard
+               round({_JACC_SQL}, 6) AS true_jaccard
         FROM cand
         JOIN sig sa ON sa.doc_id = doc_a
         JOIN sig sb ON sb.doc_id = doc_b
@@ -1404,110 +1238,42 @@ def q_dedup_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "minhash", "eval"),
 )
 def q_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _minhash_signatures(spark, sf_dir)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"mh{2 * b}").alias("x"),
-                F.col(f"mh{2 * b + 1}").alias("y"),
-            )
-            for b in range(N_BANDS)
-        ]
+    sig = _signature_combined(load_table(spark, sf_dir, "documents"))
+    cand = _lsh_candidates(sig)
+    sa = sig.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_PERMS)],
+        F.col("ts").alias("ts_a"),
     )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", "b.band", "b.x", "b.y"
+    sb = sig.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_PERMS)],
+        F.col("ts").alias("ts_b"),
     )
-    buckets = (
-        bands.groupBy("band", "x", "y")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
+    agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(N_PERMS)
     )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), b -> "
-                    "struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_PERMS)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_PERMS)])
-    agree = None
-    for i in range(N_PERMS):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        agree = term if agree is None else agree + term
-    tsets = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", tokens("text").alias("toks"))
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(ngrams_of_tokens(F.col("toks"), 3), lambda s: portable_hash64(s))
-            ).alias("ts"),
-        )
-    )
-    ta = tsets.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ts_a"))
-    tb = tsets.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("ts_b"))
-    # single-evaluation intersect: inter and union share the array_intersect
-    true_jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (
-        cand.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .join(ta, "doc_a")
-        .join(tb, "doc_b")
+    joined = (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .select(
             "doc_a",
             "doc_b",
             F.round(agree / float(N_PERMS), 6).alias("est_jaccard"),
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("double").alias("_inter"),
-            F.size("ts_a").alias("_na"),
-            F.size("ts_b").alias("_nb"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_jaccard",
-            F.round(true_jac, 6).alias("true_jaccard"),
+            "ts_a",
+            "ts_b",
         )
     )
+    return _jaccard_verified(
+        joined, ["doc_a", "doc_b", "est_jaccard"], threshold=None
+    ).withColumnRenamed("jaccard", "true_jaccard")
 
 
 @register(
     "dedup_graph_triangles",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b
-            FROM cand
-            JOIN tsets x ON x.doc_id = doc_a
-            JOIN tsets y ON y.doc_id = doc_b
-            WHERE len(list_intersect(x.ts, y.ts))::DOUBLE
-                  / (len(x.ts) + len(y.ts) - len(list_intersect(x.ts, y.ts))) >= {JACCARD_THRESHOLD}
-        )
+        WITH {_verified_pairs_sql()},
+        edges AS (SELECT doc_a AS a, doc_b AS b FROM vpairs)
         SELECT e1.a AS doc_a, e1.b AS doc_b, e2.b AS doc_c
         FROM edges e1
         JOIN edges e2 ON e2.a = e1.b
@@ -1541,34 +1307,8 @@ def q_dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_graph_degree_stats",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b
-            FROM cand
-            JOIN tsets x ON x.doc_id = doc_a
-            JOIN tsets y ON y.doc_id = doc_b
-            WHERE len(list_intersect(x.ts, y.ts))::DOUBLE
-                  / (len(x.ts) + len(y.ts) - len(list_intersect(x.ts, y.ts)))
-                  >= {JACCARD_THRESHOLD}
-        ),
+        WITH {_verified_pairs_sql()},
+        edges AS (SELECT doc_a AS a, doc_b AS b FROM vpairs),
         deg AS (
             SELECT doc_id, count(*) AS degree
             FROM (SELECT a AS doc_id FROM edges
@@ -1622,33 +1362,8 @@ def q_dup_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "corpus_curation_stats",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
-        ),
+        WITH RECURSIVE {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -1705,34 +1420,8 @@ def q_corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_graph_pagerank",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts)))
-                  >= {JACCARD_THRESHOLD}
-        ),
+        WITH {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         edges AS (
             SELECT doc_a AS src, doc_b AS dst FROM verified
             UNION ALL SELECT doc_b, doc_a FROM verified
@@ -1809,10 +1498,7 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_pairs_edit_distance",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()}
+        WITH {_verified_pairs_sql()}
         SELECT v.doc_a, v.doc_b,
                round(v.jacc, 6) AS jaccard,
                CAST(levenshtein(da.text, db.text) AS BIGINT) AS lev,
@@ -1998,11 +1684,9 @@ def _tune_oracle() -> str:
         ),
         ver_{r} AS (
             SELECT count(*) AS nv FROM cand_{r}
-            JOIN tsets ta ON ta.doc_id = da
-            JOIN tsets tb ON tb.doc_id = db
-            WHERE len(list_intersect(ta.ts, tb.ts))::DOUBLE
-                  / (len(ta.ts) + len(tb.ts)
-                     - len(list_intersect(ta.ts, tb.ts))) >= {JACCARD_THRESHOLD}
+            JOIN tsets a ON a.doc_id = da
+            JOIN tsets b ON b.doc_id = db
+            WHERE {_JACC_SQL} >= {JACCARD_THRESHOLD}
         )""")
     rows = "\n        UNION ALL ".join(
         f"""SELECT CAST({r} AS BIGINT) AS rows_per_band,
@@ -2015,9 +1699,7 @@ def _tune_oracle() -> str:
         for r, b in _TUNE_CONFIGS
     )
     return f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
+        WITH {_minhash_sig_sql()},
         tsets AS (
             SELECT doc_id, list(DISTINCT h) AS ts FROM hashed GROUP BY doc_id
         ),{",".join(parts)}
@@ -2041,29 +1723,21 @@ def _tune_oracle() -> str:
     tags=("dedup", "lsh", "minhash", "eval"),
 )
 def q_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE shingle pass and ONE grouped aggregation for the whole curve:
-    # the minhash signature mins AND the per-doc shingle-hash set come out
-    # of the same groupBy (the `combined` pattern from _lsh_verified_pairs),
-    # checkpointed once and shared by all four banding configs — previously
-    # the tokenize→shingle→hash pipeline ran twice (sig pass + tsets pass)
-    # with two separate checkpoints.
+    # ONE signature pass, checkpointed once and shared by all four banding
+    # configs. The curve verifies over the hashes reduced mod
+    # MINHASH_PRIME (its oracle's tsets come from `hashed`), derived from
+    # the kernel's 60-bit set.
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    hashed = toks.select(
-        "doc_id",
-        F.explode(F.array_distinct(ngrams_of_tokens(F.col("toks"), 3))).alias("s"),
-    ).select("doc_id", (portable_hash64("s") % MINHASH_PRIME).alias("h"))
-    combined = reliable_checkpoint(
-        hashed.groupBy("doc_id").agg(
-            *[
-                F.min(minhash_perm(F.col("h"), i)).cast("bigint").alias(f"mh{i}")
-                for i in range(N_PERMS)
-            ],
-            F.array_sort(F.collect_set("h")).alias("ts"),
+    sig = reliable_checkpoint(
+        _signature_combined(docs, checkpoint=False).select(
+            "doc_id",
+            *[f"mh{i}" for i in range(N_PERMS)],
+            F.array_distinct(
+                F.transform("ts", lambda h: h % MINHASH_PRIME)
+            ).alias("ts"),
         )
     )
-    sig = combined
-    tsets = combined.select("doc_id", "ts")
+    tsets = sig.select("doc_id", "ts")
     out = None
     for r, b in _TUNE_CONFIGS:
         bands = None
@@ -2089,21 +1763,13 @@ def q_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-        jacc = inter.cast("double") / (
-            F.size("ta") + F.size("tb") - inter
+        joined = cand.join(
+            tsets.select(F.col("doc_id").alias("da"), F.col("ts").alias("ts_a")), "da"
+        ).join(
+            tsets.select(F.col("doc_id").alias("db"), F.col("ts").alias("ts_b")), "db"
         )
-        verified = (
-            cand.join(
-                tsets.select(F.col("doc_id").alias("da"), F.col("ts").alias("ta")),
-                "da",
-            )
-            .join(
-                tsets.select(F.col("doc_id").alias("db"), F.col("ts").alias("tb")),
-                "db",
-            )
-            .where(jacc >= JACCARD_THRESHOLD)
-            .agg(F.count("*").cast("bigint").alias("nv"))
+        verified = _jaccard_verified(joined, ["da", "db"]).agg(
+            F.count("*").cast("bigint").alias("nv")
         )
         row = (
             cand.agg(F.count("*").cast("bigint").alias("nc"))
@@ -2135,33 +1801,8 @@ BFS_MAX_HOPS = 4
 @register(
     "dup_graph_bfs_hops",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
-        ),
+        WITH RECURSIVE {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -2416,33 +2057,8 @@ LINKPRED_TOPK = 20
 @register(
     "dup_graph_link_prediction",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        bands AS (
-            SELECT doc_id, 0 AS band, mh0 AS x, mh1 AS y FROM sig
-            UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-            UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-            UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band = b.band AND a.x = b.x AND a.y = b.y
-                        AND b.doc_id > a.doc_id
-        ),
-        tsets AS (
-            SELECT doc_id, list(DISTINCT {portable_hash64_sql('s')}) AS ts
-            FROM shingles GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT doc_a, doc_b
-            FROM cand
-            JOIN tsets a ON a.doc_id = doc_a
-            JOIN tsets b ON b.doc_id = doc_b
-            WHERE len(list_intersect(a.ts, b.ts))::DOUBLE
-                  / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_THRESHOLD}
-        ),
+        WITH {_verified_pairs_sql()},
+        verified AS (SELECT doc_a, doc_b FROM vpairs),
         sym AS (
             SELECT doc_a AS a, doc_b AS b FROM verified
             UNION SELECT doc_b, doc_a FROM verified
@@ -2600,23 +2216,13 @@ def compact_signature_store(spark: SparkSession, store: str) -> dict[str, int]:
 @register(
     "sigstore_append_compact",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()}
+        WITH {_minhash_sig_sql()},
+        {_BANDS_SQL}
         SELECT CAST(band AS BIGINT) AS band,
                CAST(count(*) AS BIGINT) AS n_rows,
                CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
                CAST(count(DISTINCT (x, y)) AS BIGINT) AS n_buckets
-        FROM (
-            SELECT s.doc_id, b.band,
-                   CASE b.band
-                       WHEN 0 THEN s.mh0 WHEN 1 THEN s.mh2
-                       WHEN 2 THEN s.mh4 ELSE s.mh6 END AS x,
-                   CASE b.band
-                       WHEN 0 THEN s.mh1 WHEN 1 THEN s.mh3
-                       WHEN 2 THEN s.mh5 ELSE s.mh7 END AS y
-            FROM {_minhash_sig_sql().strip().removeprefix('sig AS ')} s
-            CROSS JOIN (SELECT unnest(range(4)) AS band) b
-        )
+        FROM bands
         GROUP BY band
     """,
     doc="The FULL ingest-cycle maintenance path the signature store needs "
@@ -2693,10 +2299,7 @@ _CC_LABELS_SQL = """sym AS (
 @register(
     "leakage_safe_split",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()},
+        WITH RECURSIVE {_verified_pairs_sql()},
         {_CC_LABELS_SQL},
         assigned AS (
             SELECT d.doc_id,
@@ -2836,10 +2439,7 @@ def _fold_col(key: F.Column) -> F.Column:
 @register(
     "group_kfold_cv",
     oracle=f"""
-        WITH RECURSIVE {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()},
+        WITH RECURSIVE {_verified_pairs_sql()},
         {_CC_LABELS_SQL},
         base AS (
             SELECT d.doc_id,
@@ -3195,24 +2795,10 @@ def simhash_hamming_pairs_impl(
     blocks = sims.select("doc_id", F.explode(table_structs).alias("blk")).select(
         "doc_id", "blk.b", "blk.v"
     )
-    buckets = (
-        blocks.groupBy("b", "v")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
+    buckets = blocks.groupBy("b", "v").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), b -> "
-                    "struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    cand = _bucket_pairs(buckets).distinct()
     # shuffle-hash for the verify fetch — same checkpoint-broadcast
     # hazard as _lsh_verified_pairs (sims is a corpus-sized checkpoint
     # the static planner was broadcasting)
@@ -3300,21 +2886,10 @@ RL_MATCH_MICRO = 1_300_000  # threshold on name_jacc_micro + weights
 
 
 def _rl_pair_expand(buckets: DataFrame) -> DataFrame:
-    """(key-grouped sorted id array) -> distinct (cust_a < cust_b) pairs,
-    the bucket-local expansion idiom shared with minhash-LSH/simhash."""
-    return (
-        buckets.where(F.size("ids") >= 2)
-        .where(F.size("ids") <= RL_TRI_MAX_BLOCK)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), b -> "
-                    "struct(a AS cust_a, b AS cust_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.cust_a", "p.cust_b")
+    """(key-grouped sorted id array) -> (cust_a < cust_b) pairs of the
+    blocks within the hot-block cap, via the shared _bucket_pairs."""
+    return _bucket_pairs(
+        buckets.where(F.size("ids") <= RL_TRI_MAX_BLOCK), "cust_a", "cust_b"
     )
 
 
@@ -5139,22 +4714,11 @@ def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Jaccard, same threshold, same pair set — cross-checked by the
     # oracle, which still computes list_intersect over full hash lists.
     sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
-    buckets = (
-        hd.groupBy("h60")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
+    buckets = hd.groupBy("h60").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
     inter = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), b -> "
-                    "struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
+        _bucket_pairs(buckets)
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("double").alias("_inter"))
     )
@@ -5190,10 +4754,7 @@ def _recall_eval_oracle() -> str:
         for name, cte in families
     )
     return f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()},
+        WITH {_verified_pairs_sql()},
         {_SIMHASH_PAIRS_CTE_SQL},
         {_WINNOW_SQL.strip()},
         {_WINNOW_PAIRS_CTE_SQL},
@@ -5209,11 +4770,9 @@ def _recall_eval_oracle() -> str:
         truth AS (
             SELECT doc_a, doc_b
             FROM tcand
-            JOIN tsets ta ON ta.doc_id = doc_a
-            JOIN tsets tb ON tb.doc_id = doc_b
-            WHERE len(list_intersect(ta.ts, tb.ts))::DOUBLE
-                  / (len(ta.ts) + len(tb.ts) - len(list_intersect(ta.ts, tb.ts)))
-                  >= {JACCARD_THRESHOLD}
+            JOIN tsets a ON a.doc_id = doc_a
+            JOIN tsets b ON b.doc_id = doc_b
+            WHERE {_JACC_SQL} >= {JACCARD_THRESHOLD}
         ),
         nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),
         m_mh AS (SELECT least(doc_a, doc_b) AS doc_a,
@@ -5445,10 +5004,7 @@ def _removal_sweep_oracle() -> str:
         for name, cte in methods
     )
     return f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()},
+        WITH {_verified_pairs_sql()},
         {_WINNOW_SQL.strip()},
         {_WINNOW_PAIRS_CTE_SQL},
         {_SPAN_CTES_SQL},
@@ -5684,10 +5240,7 @@ def q_dedup_removal_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_estimate_error",
     oracle=f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()},
-        {_verified_pairs_sql().strip()}
+        WITH {_verified_pairs_sql()}
         SELECT v.doc_a, v.doc_b,
                round(v.jacc, 6) AS jacc_exact,
                round(({" + ".join(f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(N_PERMS))})

@@ -313,13 +313,11 @@ def _gq_oracle() -> str:
 
 
 def _distinct_sig_oracle() -> str:
-    from .dedup import _HASHED_SQL, _SHINGLES_SQL, _minhash_sig_sql
+    from .dedup import _minhash_sig_sql
 
     cols = ", ".join(f"mh{i}" for i in range(8))
     return f"""
-        WITH {_SHINGLES_SQL.strip()},
-        {_HASHED_SQL.strip()},
-        {_minhash_sig_sql().strip()}
+        WITH {_minhash_sig_sql()}
         SELECT DISTINCT {cols} FROM sig
     """
 

@@ -164,10 +164,15 @@ def _input_memo(spark: SparkSession, sf_dir: str, name: str, build):
     ``_input_version``). A file replaced at the same path, a new session,
     or another spelling of the same directory is never served the wrong
     artifact: a changed version rebuilds and replaces the entry. A
-    directory that cannot be read is not memoized."""
+    directory that cannot be read is not memoized. A process has one
+    live SparkContext, so entries of any other applicationId belong to
+    stopped sessions and are dropped."""
     real = os.path.realpath(sf_dir)
-    key = (spark.sparkContext.applicationId, real, name)
+    app = spark.sparkContext.applicationId
+    key = (app, real, name)
     with _MEMO_LOCK:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[stale]
         version = _input_version(real)
         if version is None:
             return build()

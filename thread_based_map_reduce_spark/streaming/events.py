@@ -364,24 +364,24 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MinHash signature dedup — the streaming twin of the batch
     LSH dedup family (VERDICT r6 #8).
 
-    Per-document MinHash signatures are computed STATELESSLY (the whole
-    shingle→hash→min pipeline is scalar array expressions over each row —
-    no aggregation, so the map stage needs no state store), then
-    ``dropDuplicatesWithinWatermark`` keeps the first-seen row per
-    signature: signature-identical documents — which is what the batch
-    LSH path's band buckets are built to find — are emitted exactly once.
-    Event time is synthesized from doc_id (the table carries none) and the
-    watermark is far beyond the fixture's time spread, so no state expires
-    mid-run and the emitted set is exactly DISTINCT(signature) —
-    deterministic for the oracle — while the watermark contract still
-    bounds state for a production deployment with real arrival times.
-    Only the signature columns are projected out: which physical doc of a
-    signature-duplicate pair arrives first is scheduler-dependent, so the
-    emitted row must not carry doc-identifying columns.
+    Per-document MinHash signatures come from the batch kernel itself,
+    ``operators.dedup._signature_combined``, which computes them per row
+    (tokenize once, keep docs with >= 3 tokens, distinct shingle hashes,
+    8 permutation mins — no aggregation, so the map stage needs no state
+    store), then ``dropDuplicatesWithinWatermark`` keeps the first-seen
+    row per signature: signature-identical documents — which is what the
+    batch LSH path's band buckets are built to find — are emitted exactly
+    once. Event time is synthesized from doc_id (the table carries none)
+    and the watermark is far beyond the fixture's time spread, so no
+    state expires mid-run and the emitted set is exactly
+    DISTINCT(signature) — deterministic for the oracle — while the
+    watermark contract still bounds state for a production deployment
+    with real arrival times. Only the signature columns are projected
+    out: which physical doc of a signature-duplicate pair arrives first
+    is scheduler-dependent, so the emitted row must not carry
+    doc-identifying columns.
     """
-    from ..functions.hashing import MINHASH_PRIME, minhash_perm, portable_hash64
-    from ..functions.textfns import ngrams_of_tokens, tokens
-    from ..operators.dedup import N_PERMS
+    from ..operators.dedup import N_PERMS, _signature_combined
 
     stage = _staging_dir(spark, sf_dir, "documents")
     schema = _stream_schema(spark, sf_dir, "documents")
@@ -390,27 +390,13 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    docs = raw.where(F.col("text").isNotNull()).withColumn(
-        "hs",
-        F.transform(
-            F.array_distinct(ngrams_of_tokens(tokens("text"), 3)),
-            lambda s: portable_hash64(s) % F.lit(MINHASH_PRIME),
-        ),
-    ).where(F.size("hs") > 0)
-    sig_cols = [
-        F.array_min(F.transform(F.col("hs"), lambda h: minhash_perm(h, i)))
-        .cast("bigint")
-        .alias(f"mh{i}")
-        for i in range(N_PERMS)
-    ]
-    keyed = docs.select(
+    mh = [f"mh{i}" for i in range(N_PERMS)]
+    keyed = _signature_combined(raw, checkpoint=False).select(
         F.timestamp_seconds(F.lit(1_600_000_000) + F.col("doc_id") % 3600).alias("ts"),
-        *sig_cols,
+        *mh,
     )
-    deduped = keyed.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark(
-        [f"mh{i}" for i in range(N_PERMS)]
-    )
-    return deduped.select(*[f"mh{i}" for i in range(N_PERMS)])
+    deduped = keyed.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark(mh)
+    return deduped.select(*mh)
 
 
 def user_ttl_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
