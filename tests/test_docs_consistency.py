@@ -77,10 +77,8 @@ def test_scratch_dirs_and_exit_hooks_live_in_the_registry():
     assert not calls, calls
 
 
-def test_minhash_lsh_kernel_is_defined_once():
-    # One near-dup algorithm: the oracle banding, the in-bucket pair
-    # expansion and the MinHash permutation call each live in one place
-    # (operators/dedup.py's kernel), so no entry can drift from the others.
+def _package_sources() -> dict[str, str]:
+    """Every package module's text, keyed by its path in the package."""
     pkg = os.path.join(os.path.dirname(__file__), "..", "thread_based_map_reduce_spark")
     sources = {}
     for root, _dirs, files in os.walk(pkg):
@@ -89,23 +87,94 @@ def test_minhash_lsh_kernel_is_defined_once():
                 path = os.path.join(root, f)
                 with open(path) as fh:
                     sources[os.path.relpath(path, pkg)] = fh.read()
+    return sources
+
+
+def test_minhash_lsh_kernel_is_defined_once():
+    # One near-dup algorithm: the oracle banding, the in-bucket pair
+    # expansion and the MinHash permutation call each live in one place
+    # (operators/dedup.py's kernel), so no entry can drift from the others.
+    sources = _package_sources()
     for text in ("UNION ALL SELECT doc_id, 1, mh2, mh3", "transform(slice(ids, i + 2"):
         where = {rel: src.count(text) for rel, src in sources.items() if text in src}
         assert sum(where.values()) == 1, (text, where)
     dedup = os.path.join("operators", "dedup.py")
-    kernel = next(
-        node
+    spans = {
+        node.name: (node.lineno, node.end_lineno)
         for node in ast.parse(sources[dedup]).body
-        if isinstance(node, ast.FunctionDef) and node.name == "_signature_combined"
-    )
-    stray = []
-    for rel, src in sources.items():
-        if not rel.startswith("operators") or rel.endswith("engineering.py"):
-            continue
-        for lineno, line in enumerate(src.splitlines(), 1):
-            if "minhash_perm(" not in line:
-                continue
-            if rel == dedup and kernel.lineno <= lineno <= kernel.end_lineno:
-                continue
-            stray.append(f"{rel}:{lineno}")
+        if isinstance(node, ast.FunctionDef)
+    }
+
+    def outside(rel, text, owners):
+        src = sources[rel]
+        return [
+            f"{rel}:{lineno}"
+            for lineno, line in enumerate(src.splitlines(), 1)
+            if text in line
+            and not any(
+                rel == dedup and spans[o][0] <= lineno <= spans[o][1] for o in owners
+            )
+        ]
+
+    stray = [
+        site
+        for rel in sources
+        if rel.startswith("operators") and not rel.endswith("engineering.py")
+        for site in outside(rel, "minhash_perm(", ["_signature_combined"])
+    ]
     assert not stray, stray
+    # the word-trigram shingles of a tokenized doc: the kernel's signature
+    # builder, plus jaccard_blocked_pairs, which keeps short docs as
+    # empty sets
+    stray = outside(
+        dedup,
+        'ngrams_of_tokens(F.col("toks"), 3)',
+        ["_signature_combined", "jaccard_blocked_pairs"],
+    )
+    assert not stray, stray
+
+
+def test_quality_score_has_one_spark_definition():
+    # The doc quality score's Spark expression lives in
+    # functions/textfns.quality_score; every Spark site calls it (the
+    # DuckDB oracles keep their own SQL text).
+    sources = _package_sources()
+    for text in ("F.lit(20.0)", "F.lit(100.0)"):
+        where = {rel: src.count(text) for rel, src in sources.items() if text in src}
+        assert where == {os.path.join("functions", "textfns.py"): 1}, (text, where)
+    call = re.compile(r"\bquality_score\(")
+    calls = {
+        rel: len(call.findall(src)) for rel, src in sources.items() if call.search(src)
+    }
+    assert calls == {
+        os.path.join("functions", "textfns.py"): 1,
+        os.path.join("operators", "dedup.py"): 1,
+        os.path.join("operators", "text.py"): 2,
+        "pipeline.py": 1,
+    }, calls
+
+
+def test_cited_tools_and_plan_dumps_exist():
+    # A retired script or plan dump cannot stay cited: every scripts/<name>
+    # and plans/r<N> path named in the package, the tests, the top-level
+    # docs, __spark_entry__.py and the skills exists in the repo.
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    paths = ["README.md", "SURVEY.md", "__spark_entry__.py"]
+    tops = ("thread_based_map_reduce_spark", "tests", os.path.join(".claude", "skills"))
+    for top in tops:
+        for root, _dirs, files in os.walk(os.path.join(repo, top)):
+            paths += [
+                os.path.relpath(os.path.join(root, f), repo)
+                for f in files
+                if f.endswith((".py", ".md"))
+            ]
+    cite = re.compile(r"\b(scripts/\w+(?:\.py)?|plans/r\d+)")
+    missing = []
+    for rel in paths:
+        with open(os.path.join(repo, rel)) as fh:
+            for lineno, line in enumerate(fh, 1):
+                for target in cite.findall(line):
+                    found = [target] if target.endswith(".py") else [target, target + ".py"]
+                    if not any(os.path.exists(os.path.join(repo, c)) for c in found):
+                        missing.append(f"{rel}:{lineno} {target}")
+    assert not missing, missing

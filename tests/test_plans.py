@@ -511,7 +511,7 @@ _BOUNDED_GLOBAL_WINDOW_SITES = {
     "dedup_sorted_neighborhood": 2,
     # r10 audit: the same two bounded prefix-sum windows as
     # zorder_pruning_stats — each runs over the <= RANK_BUCKETS=256-row
-    # bucket-count table (boundedness comment at _global_rank), one per
+    # bucket-count table (boundedness comment at _global_rank_layouts), one per
     # layout branch
     "hilbert_pruning_stats": 2,
 }

@@ -3,9 +3,9 @@
 VERDICT r12 #2: the r12 rewrites (map-only gopher, zero-exchange winnow,
 single-groupBy seed chain, one-pass layout ranks) had no plan gates, so a
 regression re-introducing an exchange would go unnoticed. The counts below
-are frozen from the committed AQE-final dumps in plans/r13/*_after.txt
-(same capture path: execute the Dataset's own QueryExecution, then count
-only the Final Plan tree).
+were frozen from the r13 AQE-final plans (same capture path: execute the
+Dataset's own QueryExecution, then count only the Final Plan tree);
+``scripts/dump_plans.py`` prints a query's executed plan to compare.
 """
 
 from __future__ import annotations
@@ -50,8 +50,7 @@ def test_exact_substring_spans_exchanges_frozen(spark, sf_dir):
     # seed chain (winnow ckpt scan is exchange-free, df semi-join +
     # groupBy share one (fp,gram) partitioning) + seed_arr groupBy + two
     # shuffle-hash token joins: 8 exchanges in the initial plan (the
-    # AQE-final plan reuses one — 7 in
-    # plans/r13/dedup_exact_substring_spans_after.txt). The extension
+    # AQE-final plan reuses one — 7 in its r13 executed plan). The extension
     # joins must never degrade to sort-merge (checkpoint-scan broadcast
     # hazard is pinned SHUFFLE_HASH).
     plan = plan_of(spark, sf_dir, "dedup_exact_substring_spans")

@@ -24,6 +24,17 @@ def tokens(text: Column | str) -> Column:
     return F.filter(F.split(c, " "), lambda t: t != "")
 
 
+def quality_score(n_tokens: Column, n_uniq: Column, n_chars: Column) -> Column:
+    """The doc quality score from a doc's token count, distinct-token count
+    and character length: lexical diversity + length saturation. NULL for
+    a doc with no tokens."""
+    return (
+        0.5 * (n_uniq.cast("double") / F.nullif(n_tokens, F.lit(0)))
+        + 0.3 * F.least(n_tokens / F.lit(20.0), F.lit(1.0))
+        + 0.2 * F.least(n_chars / F.lit(100.0), F.lit(1.0))
+    )
+
+
 def _positions(count: Column) -> Column:
     # sequence(1, 0) in Spark yields a DESCENDING [1, 0], not [] — guard the
     # shorter-than-n case explicitly.

@@ -13,7 +13,7 @@ independent DuckDB oracle, not by reference parity.
 Scale notes are inline per operator; the common theme is: no global
 single-task window anywhere — the skyline's cumulative max runs as
 256 parallel range-bucket windows plus a broadcast bucket-prefix
-(the ``_global_rank`` shape from ``layout.py`` lifted from ranks to
+(the ``_global_rank_layouts`` shape from ``layout.py`` lifted from ranks to
 maxima), streaks shuffle once on ``user_id``, and the decay operator
 works entirely on the tiny (hour × type) aggregate grid.
 """
@@ -881,7 +881,7 @@ def bucketed_group_rank(
     ``tiebreak``) WITHOUT a per-group window: uniform range buckets
     (bucket id monotone in value) give local per-(group, bucket)
     row_numbers plus a per-group bucket-prefix offset — the layout.py
-    ``_global_rank`` shape parameterized by a group key, so no window
+    ``_global_rank_layouts`` shape parameterized by a group key, so no window
     task ever sorts a whole group. Appends column ``i`` (1-based rank).
     Property-tested against a plain window rank on random inputs
     (tests/test_property_analytics.py)."""
@@ -954,7 +954,7 @@ def bucketed_group_rank(
     "nation rank is NOT a per-nation window: revenues bucket into 64 "
     "uniform ranges (bucket id monotone in revenue), rank = local "
     "row_number per (nation, bucket) + broadcast per-nation bucket-prefix "
-    "offset — the layout.py _global_rank shape parameterized by nation, "
+    "offset — the layout.py _global_rank_layouts shape parameterized by nation, "
     "so no task ever sorts a whole nation. Oracle uses the plain "
     "window-rank formulation; the hash gate proves the two-level rank "
     "reconstruction exact",
@@ -1949,7 +1949,7 @@ def q_churn_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # +1/-1 deltas — the textbook single-task-window trap. Distributed shape:
 # per-timestamp delta aggregation (one narrow shuffle), then the two-level
 # prefix-sum reconstruction (day-bucket local windows + a broadcast
-# exclusive prefix over per-day totals — the _global_rank trick lifted from
+# exclusive prefix over per-day totals — the _global_rank_layouts trick lifted from
 # ranks to running sums; the offsets window is bounded by #distinct days).
 # Intra-timestamp ordering ambiguity is designed out: closed intervals are
 # evaluated per DISTINCT ts as conc(ts) = starts(<=ts) - ends(<ts)
@@ -2182,7 +2182,7 @@ def q_chi2_lang_source_independence(spark: SparkSession, sf_dir: str) -> DataFra
 # aggregates (order-independent); the z-score is one shared IEEE fragment
 # over them. The global rank ordering itself uses the two-level
 # reconstruction (price-bucket local windows + broadcast bucket prefix —
-# the _global_rank shape), never a one-partition window.
+# the _global_rank_layouts shape), never a one-partition window.
 MW_BUCKETS = 256
 
 _MW_Z_SQL = (
@@ -2234,7 +2234,7 @@ _MW_Z_SQL = (
     "tie-corrected z is one shared IEEE fragment over them — fully "
     "hash-gated. Scale: one shuffle groups rows per distinct value; the "
     "global rank order is rebuilt from price-bucket local windows plus a "
-    f"broadcast {MW_BUCKETS}-bucket prefix (the _global_rank shape) — no "
+    f"broadcast {MW_BUCKETS}-bucket prefix (the _global_rank_layouts shape) — no "
     "one-partition sort; the tie cube assumes no single value repeats "
     ">~2M times (BIGINT headroom; ANSI mode errors rather than wraps)",
     tags=("agg", "stats", "eval"),

@@ -384,7 +384,7 @@ def q_rag_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "concat-then-chunk). Per shard: sequence count, docs split across a "
     "window boundary, and tail-padding waste — the numbers that size a "
     "training run. The per-shard running token sum is computed with the "
-    "bucket-prefix-sum shape (shard_assignment_stats' _global_rank trick, "
+    "bucket-prefix-sum shape (shard_assignment_stats' _global_rank_layouts trick, "
     "lifted from ranks to sums): 256 order-preserving hash-range buckets "
     "per shard carry per-bucket token totals, a broadcast prefix sum of "
     "those 2048 tiny rows gives each bucket's starting offset, and the "

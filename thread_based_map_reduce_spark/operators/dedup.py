@@ -41,6 +41,7 @@ from ..functions.textfns import (
     EMPTY_INT_ARRAY_SQL,
     ngrams_of_tokens,
     ngrams_sql,
+    quality_score,
     tokens,
     tokens_sql,
 )
@@ -176,12 +177,8 @@ def _quality_col() -> F.Column:
     """The doc quality score (Spark side of _QUALITY_SQL): lexical
     diversity + length saturation — the keep-best ranking signal."""
     toks = tokens("text")
-    n_tokens = F.size(toks)
-    n_uniq = F.size(F.array_distinct(toks))
-    return (
-        0.5 * (n_uniq.cast("double") / F.nullif(n_tokens, F.lit(0)))
-        + 0.3 * F.least(n_tokens / F.lit(20.0), F.lit(1.0))
-        + 0.2 * F.least(F.length("text") / F.lit(100.0), F.lit(1.0))
+    return quality_score(
+        F.size(toks), F.size(F.array_distinct(toks)), F.length("text")
     )
 
 
@@ -1998,19 +1995,17 @@ def _ppjoin_prefix_index(spark: SparkSession, sf_dir: str):
     n ≡ 2 (mod 4), a divergence invisible at the pair level unless a
     qualifying pair lands exactly on the boundary element.
     """
+    # (doc_id, h): the kernel's shingle hashes reduced mod MINHASH_PRIME
+    # (the oracle's `hashed`), distinct per doc
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    dsh = (
-        toks.select(
+    dsh = reliable_checkpoint(
+        _signature_combined(docs, checkpoint=False).select(
             "doc_id",
-            F.explode(F.array_distinct(ngrams_of_tokens(F.col("toks"), 3))).alias(
-                "s"
-            ),
+            F.explode(
+                F.array_distinct(F.transform("ts", lambda h: h % MINHASH_PRIME))
+            ).alias("h"),
         )
-        .select("doc_id", (portable_hash64("s") % MINHASH_PRIME).alias("h"))
-        .distinct()
     )
-    dsh = reliable_checkpoint(dsh)
     dfreq = dsh.groupBy("h").agg(F.count("*").alias("df"))
     ordered = (
         dsh.join(dfreq, "h")
@@ -2662,11 +2657,12 @@ _SH64_BLOCK_MASK = (1 << _SH64_BLOCK_BITS) - 1
 
 
 def sized_simhash_blocks(n_docs: int, *, k: int = SIMHASH64_HAM_K) -> int:
-    """The production sizing rule as code (the sized_lsh_params pattern,
-    similarity.py:135): with m blocks, pigeonhole guarantees any pair
-    within hamming k agrees on SOME (m-k)-block subset, so bucketing on
-    every C(m, m-k) subset (Manku's multi-table design) is complete at a
-    table key width of (m-k) * (60 // m) bits — and candidate volume is
+    """The production sizing rule as code (the embedding-LSH rule of
+    similarity.py, bits-per-band tracking log2 N): with m blocks,
+    pigeonhole guarantees any pair within hamming k agrees on SOME
+    (m-k)-block subset, so bucketing on every C(m, m-k) subset (Manku's
+    multi-table design) is complete at a table key width of
+    (m-k) * (60 // m) bits — and candidate volume is
     ~tables * N^2 / 2^width. Pick the smallest m in [k+1, 6] whose key
     width covers log2(N) + 8 (avg bucket occupancy <= ~1/256); m=4 (one
     15-bit block per table) is the testdata default, m=5 gives 24-bit
@@ -2835,8 +2831,8 @@ def simhash_hamming_pairs_impl(
     "runs only inside buckets — never a corpus self-join. Pair expansion "
     "is local to each bucket's sorted id array (the minhash-LSH idiom). "
     "100 TB shape — with the same sizing contract as the embedding-LSH "
-    "family, and the rule is CODE + MEASURED (sized_simhash_blocks, "
-    "scripts/simhash_sizing_point.py): FIXED block width gives candidate "
+    "family, and the rule is CODE + MEASURED (sized_simhash_blocks; "
+    "BASELINE.md): FIXED block width gives candidate "
     "volume ~N²/2^block_bits (measured wire 14 -> 430 -> 6,134 MB per "
     "decade at 15-bit blocks), while the Manku multi-table layout — m "
     "blocks, C(m,m-k) tables, (m-k)*(60/m)-bit keys, completeness "
@@ -4691,18 +4687,17 @@ def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixture max df = 7; a production sample would df-cap the truth
     index and report the skipped mass)."""
     docs = load_table(spark, sf_dir, "documents")
-    hd = reliable_checkpoint(
-        spread_small_scan(docs)
-        .select("doc_id", tokens("text").alias("toks"))
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(ngrams_of_tokens(F.col("toks"), 3))).alias(
-                "s"
-            ),
+    # The kernel's distinct 60-bit shingle hashes per doc, checkpointed
+    # BEFORE the explode: exploding a bare column makes Catalyst infer a
+    # size(ts) > 0 filter and push it below the projection, substituting
+    # the whole shingle pipeline into the condition (measured 47 s vs 1.2 s
+    # with one 120k-char doc, warm local[4] session).
+    ts = reliable_checkpoint(
+        _signature_combined(spread_small_scan(docs), checkpoint=False).select(
+            "doc_id", "ts"
         )
-        .select("doc_id", portable_hash64("s").alias("h60"))
-        .distinct()
     )
+    hd = ts.select("doc_id", F.explode("ts").alias("h60"))
     # r13 (guide §2.3 "shuffle keys and metadata instead of payloads"): the
     # old shape collected the FULL distinct-hash set per doc (tsets) and
     # shipped BOTH arrays to every candidate pair for array_intersect —
@@ -4713,7 +4708,7 @@ def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array. |A| / |B| join in as two narrow per-doc counts. Same hash-set
     # Jaccard, same threshold, same pair set — cross-checked by the
     # oracle, which still computes list_intersect over full hash lists.
-    sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sizes = ts.select("doc_id", F.size("ts").cast("bigint").alias("n"))
     buckets = hd.groupBy("h60").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )

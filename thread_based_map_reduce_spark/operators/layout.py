@@ -74,50 +74,23 @@ def _interleave(xq: Column, yq: Column) -> Column:
     return z
 
 
-def _global_rank(
-    df: DataFrame, sort: Column, bucket: Column, tiebreak: str = "o_orderkey"
-) -> DataFrame:
-    """Global row_number by (sort, tiebreak) without a one-partition window.
-
-    ``bucket`` must be monotone in ``sort``, and ``tiebreak`` must be a
-    unique column of ``df``: per-bucket ranks (parallel windows) plus a
-    broadcast prefix sum of bucket counts then reproduce the single-pass
-    global rank exactly (same trick, and the same cross-engine proof, as
-    shard_assignment_stats).
-    """
-    base = df.withColumn("_s", sort).withColumn("_b", bucket)
-    counts = base.groupBy("_b").agg(F.count("*").alias("_bn"))
-    offsets = counts.select(
-        "_b",
-        F.coalesce(
-            F.sum("_bn").over(
-                W.orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("_off"),
-    )
-    within = F.row_number().over(W.partitionBy("_b").orderBy("_s", tiebreak))
-    return base.join(F.broadcast(offsets), "_b").withColumn(
-        "rn", F.col("_off") + within
-    )
-
-
 def _global_rank_layouts(
     df: DataFrame,
     layouts: list,
     tiebreak: str = "o_orderkey",
 ) -> DataFrame:
-    """:func:`_global_rank` for SEVERAL layouts in one pass (r12).
+    """Global row_number by (sort, tiebreak) per layout, without a
+    one-partition window.
 
-    ``layouts`` is a list of (name, sort Column, bucket Column). The old
-    shape ran one `_global_rank` per layout — each paying its own bucket
-    count aggregate, broadcast offsets build, rank window, and scan of
-    the checkpointed frame, then unioned the branches. One layout-
-    exploded frame shares all of them: a single count aggregate, one
-    (layout, _b)-keyed broadcast, one rank window — half the jobs for
-    the two-layout queries. Rank values per layout are identical (the
-    window partitions by layout, so each layout's prefix-sum and
-    within-bucket order are untouched)."""
+    ``layouts`` is a list of (name, sort Column, bucket Column). Each
+    ``bucket`` must be monotone in its ``sort``, and ``tiebreak`` must be
+    a unique column of ``df``: per-bucket ranks (parallel windows) plus a
+    broadcast prefix sum of bucket counts then reproduce the single-pass
+    global rank exactly (same trick, and the same cross-engine proof, as
+    shard_assignment_stats). One layout-exploded frame serves every
+    layout: a single count aggregate, one (layout, _b)-keyed broadcast,
+    one rank window. The window partitions by layout, so each layout's
+    prefix sum and within-bucket order are its own."""
     structs = F.array(
         *[
             F.struct(

@@ -2,7 +2,7 @@
 positional explode, NOT IN, UNION ALL, sessionization, approximate
 aggregates.
 
-Cross-engine parity notes (measured in scripts/parity_probe*):
+Cross-engine parity notes (measured with both engines on testdata):
 percentile (exact interpolated) ≡ DuckDB quantile_cont; stddev/var/corr/
 covar/kurtosis agree at the shown roundings; skewness does NOT (different
 bias normalization) and is deliberately excluded from oracle-checked
@@ -224,9 +224,9 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fails the hash — so the approximation quality itself is what is "
     "driver-checked, not the engine-specific register layout. The bands "
     "sit ~5 sigma out, so a flip is overwhelmingly a code regression, not "
-    "an accuracy event: the response is re-run and diagnose via "
-    "approx_aggregates_debug() (raw approx vs exact per group), never "
-    "widen the band (ADVICE r5)",
+    "an accuracy event: the response is re-run and diagnose by selecting "
+    "the raw approx columns next to their exact anchors, never widen the "
+    "band (ADVICE r5)",
     tags=("agg", "approx"),
 )
 def q_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,34 +265,6 @@ def q_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         within("approx_parts", "n_parts_exact", 0.05).alias("parts_within_5pct"),
         within("approx_orders", "n_orders_exact", 0.05).alias("orders_within_5pct"),
         within("approx_median", "exact_median", 0.01).alias("median_within_1pct"),
-    )
-
-
-def approx_aggregates_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic companion to ``approx_aggregates`` (ADVICE r5): the raw
-    sketch estimates next to their exact anchors and relative errors, so
-    an out-of-band contract flip in the hashed row is diagnosable without
-    editing the query. Not a catalog entry — the raw estimates are
-    engine-specific and can never sit under the cross-engine hash gate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-        F.approx_count_distinct("l_orderkey", 0.01).alias("approx_orders"),
-        F.countDistinct("l_orderkey").alias("exact_orders"),
-        F.percentile_approx("l_extendedprice", 0.5, 10000).alias("approx_median"),
-        F.expr("percentile(l_extendedprice, 0.5)").alias("exact_median"),
-    )
-    rel = lambda a, e: F.abs(  # noqa: E731
-        F.col(a).cast("double") / F.col(e).cast("double") - 1.0
-    )
-    return agg.select(
-        "l_returnflag", "approx_parts", "exact_parts",
-        rel("approx_parts", "exact_parts").alias("parts_rel_err"),
-        "approx_orders", "exact_orders",
-        rel("approx_orders", "exact_orders").alias("orders_rel_err"),
-        "approx_median", "exact_median",
-        rel("approx_median", "exact_median").alias("median_rel_err"),
     )
 
 

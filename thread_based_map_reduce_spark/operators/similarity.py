@@ -103,73 +103,43 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # p ≈ 0.63 — the hard instance for sign-LSH), so the default trades
 # shorter bands (4 bits) × more tables (4) for measured recall@3 ≈ 0.5
 # (multi-probe ≈ 0.9) vs 0.033 for round-1's single fixed 8-bit bucket.
-# At 100 TB: raise N_PLANES so bits-per-band tracks log2 N, keep >= 2
-# bands, and gate any retune on ann_recall_eval. That rule is now CODE —
-# sized_lsh_params(n_vecs) below — and MEASURED on the 10×/100× Heaps
-# fixtures (scripts/lsh_sizing_point.py; BASELINE.md "LSH sizing"): the
-# candidate-fraction collapse turns the embedding-LSH family's 10× point
-# at-or-below linear under production sizing.
+# At 100 TB: raise N_PLANES so bits-per-band tracks log2 N (bits =
+# max(4, ceil(log2(N / 125))) keeps bucket occupancy at the testdata's
+# 2,000 / 2^4 = 125), keep >= 2 bands, and gate any retune on
+# ann_recall_eval. BASELINE.md "LSH sizing" records the measured
+# candidate-fraction collapse on the 10×/100× Heaps fixtures.
 N_PLANES = 16  # r seeded random hyperplanes (VERDICT r1: parameter, >= 16)
 N_LSH_BANDS = 4  # band tables; each band = N_PLANES // N_LSH_BANDS sign bits
 _PLANES_PER_BAND = N_PLANES // N_LSH_BANDS
 _LSH_SEED = 20260813
 
 
-def _make_planes(n_planes: int = N_PLANES) -> list[list[float]]:
+def _make_planes() -> list[list[float]]:
     import numpy as np
 
-    # always drawn from the same seed, so plane i is IDENTICAL whatever
-    # n_planes is (standard_normal fills row-major) — a sized variant
-    # extends the default plane set, never replaces it
     rng = np.random.default_rng(_LSH_SEED)
     return [
         [round(float(x), 6) for x in row]
-        for row in rng.standard_normal((n_planes, DIMS))
+        for row in rng.standard_normal((N_PLANES, DIMS))
     ]
 
 
 _PLANES = _make_planes()
 
 
-def sized_lsh_params(
-    n_vecs: int, *, target_bucket: int = 125, n_bands: int = N_LSH_BANDS
-) -> tuple[int, int]:
-    """The production sizing rule as code (VERDICT r7 #1, was prose at the
-    constants above): bits-per-band = max(4, ceil(log2(N / target_bucket)))
-    so expected bucket occupancy stays ~target_bucket as the corpus grows
-    and the unrelated-pair candidate fraction (bands × 2^-bits) collapses
-    ∝ 1/N. target_bucket=125 anchors to the testdata default (2,000
-    vectors / 2^4 = 125). Returns (n_planes, n_bands)."""
-    import math
-
-    bits = max(4, math.ceil(math.log2(max(1, n_vecs) / target_bucket)))
-    return bits * n_bands, n_bands
-
-
-def _band_buckets_spark(
-    col: str,
-    *,
-    planes: list[list[float]] | None = None,
-    n_bands: int = N_LSH_BANDS,
-) -> list[F.Column]:
+def _band_buckets_spark(col: str) -> list[F.Column]:
     """One bigint bucket per band: packed sign bits of the band's planes.
-    16 sequential-fold dot products per row (default sizing), all
-    JVM-side; sign agreement with the oracle needs |dot| >>
-    summation-order ulps (~1e-13), which random unit-scale planes give
-    with overwhelming probability. ``planes``/``n_bands`` default to the
-    module constants the catalog oracles embed; sized callers (the
-    scale-measurement path) pass _make_planes(sized_lsh_params(N)[0])."""
+    16 sequential-fold dot products per row, all JVM-side; sign agreement
+    with the oracle needs |dot| >> summation-order ulps (~1e-13), which
+    random unit-scale planes give with overwhelming probability."""
     from ..functions.vectors import dot_product
 
-    if planes is None:
-        planes = _PLANES
-    planes_per_band = len(planes) // n_bands
     v = F.col(col).cast("array<double>")
     buckets = []
-    for b in range(n_bands):
+    for b in range(N_LSH_BANDS):
         acc = F.lit(0)
-        for j in range(planes_per_band):
-            plane = planes[b * planes_per_band + j]
+        for j in range(_PLANES_PER_BAND):
+            plane = _PLANES[b * _PLANES_PER_BAND + j]
             bit = dot_product(v, F.array(*[F.lit(x) for x in plane])) > 0
             acc = acc + F.when(bit, F.lit(1 << j)).otherwise(F.lit(0))
         buckets.append(acc.cast("bigint"))
@@ -247,13 +217,7 @@ _LSH_TOPK_SQL_TAIL = f"""
     """
 
 
-def lsh_candidates(
-    emb: DataFrame,
-    *,
-    multiprobe: bool = False,
-    n_planes: int | None = None,
-    n_bands: int = N_LSH_BANDS,
-) -> DataFrame:
+def lsh_candidates(emb: DataFrame, *, multiprobe: bool = False) -> DataFrame:
     """Distinct (qid, vec_id) candidate pairs from band-bucket collisions.
 
     The corpus never cross-joins: each vector lands in N_LSH_BANDS (band,
@@ -261,19 +225,14 @@ def lsh_candidates(
     bucket collisions. Multi-probe additionally probes every hamming-1
     bucket of the query's signature in each band: the exact bucket plus
     one flip per band bit, i.e. 1 + bits-per-band probes per band.
-    ``n_planes``/``n_bands`` size bits-per-band (sized_lsh_params); the
-    catalog entries keep the oracle-pinned defaults.
     """
-    planes = _make_planes(n_planes) if n_planes is not None else _PLANES
-    bits_per_band = len(planes) // n_bands
-    probe_deltas = [0] + [1 << j for j in range(bits_per_band)]
-    bucket_cols = _band_buckets_spark("embedding", planes=planes, n_bands=n_bands)
+    bucket_cols = _band_buckets_spark("embedding")
     bands = emb.select(
         "vec_id",
         F.explode(
             F.array(*[
                 F.struct(F.lit(b).alias("band"), bucket_cols[b].alias("bucket"))
-                for b in range(n_bands)
+                for b in range(N_LSH_BANDS)
             ])
         ).alias("bb"),
     ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -284,7 +243,7 @@ def lsh_candidates(
             "vec_id",
             "band",
             F.explode(
-                F.array(*[F.lit(d) for d in probe_deltas])
+                F.array(*[F.lit(d) for d in _PROBE_DELTAS])
             ).alias("delta"),
             F.col("bucket").alias("base"),
         ).select(
@@ -309,18 +268,9 @@ def lsh_candidates(
     )
 
 
-def _lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    multiprobe: bool,
-    n_planes: int | None = None,
-    n_bands: int = N_LSH_BANDS,
-) -> DataFrame:
+def _lsh_topk(spark: SparkSession, sf_dir: str, *, multiprobe: bool) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cand = lsh_candidates(
-        emb, multiprobe=multiprobe, n_planes=n_planes, n_bands=n_bands
-    )
+    cand = lsh_candidates(emb, multiprobe=multiprobe)
     qv = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
@@ -939,27 +889,17 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_lsh_pairs(spark, sf_dir, 0.4)
 
 
-def embedding_lsh_candidates(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n_planes: int | None = None,
-    n_bands: int = N_LSH_BANDS,
-) -> DataFrame:
+def embedding_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (vec_a, vec_b) candidate pairs (a < b) from band-bucket
-    collisions — the blocking stage alone, BEFORE cosine verification.
-    Split out (r8) so the scale measurement can count candidate volume
-    directly; ``n_planes`` sizes bits-per-band (sized_lsh_params), default
-    the catalog constants."""
+    collisions — the blocking stage alone, BEFORE cosine verification."""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = _make_planes(n_planes) if n_planes is not None else None
-    bucket_cols = _band_buckets_spark("embedding", planes=planes, n_bands=n_bands)
+    bucket_cols = _band_buckets_spark("embedding")
     bands = emb.select(
         "vec_id",
         F.explode(
             F.array(*[
                 F.struct(F.lit(b).alias("band"), bucket_cols[b].alias("bucket"))
-                for b in range(n_bands)
+                for b in range(N_LSH_BANDS)
             ])
         ).alias("bb"),
     ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -984,26 +924,17 @@ def embedding_lsh_candidates(
 
 
 def embedding_lsh_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float,
-    *,
-    n_planes: int | None = None,
-    n_bands: int = N_LSH_BANDS,
+    spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
     """(vec_a, vec_b, cos) pairs from band-bucket collisions, cosine-verified
     at ``threshold`` — the dedup_embedding_lsh body, shared with the DBSCAN
-    entry (which needs the same neighbor graph at a looser ε). The sizing
-    knobs default to the catalog constants (oracle determinism); the scale
-    path passes sized_lsh_params(N) to collapse the candidate fraction."""
+    entry (which needs the same neighbor graph at a looser ε)."""
     from ..functions.vectors import l2_norm
     from ..operators.dedup import _hint_small
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_vecs = table_row_count(spark, sf_dir, "embeddings")  # memoized count-star
-    cand = embedding_lsh_candidates(
-        spark, sf_dir, n_planes=n_planes, n_bands=n_bands
-    )
+    cand = embedding_lsh_candidates(spark, sf_dir)
     withnorm = emb.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
     ea = withnorm.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), F.col("nrm").alias("nrm_a")
@@ -1746,13 +1677,14 @@ _RECALL_TRUTH_SIZE = N_QUERIES * 3
     "path — sign-LSH bucketed search, IVF nprobe=1, and the PQ "
     "ADC+rerank pipeline — against the exact brute-force top-3 ground "
     "truth, one row per method. This is the number a 100 TB deployment "
-    "retunes buckets/probes/shortlists by, and the gate sized_lsh_params "
-    "retunes against: run it (sampled query set) after any corpus growth "
-    "or sizing change, compare methods at equal candidate budgets. Each "
+    "retunes buckets/probes/shortlists by, and the gate any bits-per-band "
+    "retune is checked against: run it (sampled query set) after any "
+    "corpus growth or sizing change, compare methods at equal candidate "
+    "budgets. Each "
     "method reuses its catalog twin's exact construction, so the measured "
     "recall IS the production path's recall, not a simplified replica's; "
     "the scale points live in BASELINE.md (ANN recall/latency row, "
-    "measured on the 10× Heaps fixture via scripts/ann_recall_point.py).",
+    "measured on the 10× Heaps fixture).",
     tags=("similarity", "ann", "eval", "lsh", "ivf", "quantization"),
 )
 def q_ann_method_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2668,26 +2600,9 @@ def _dbscan_oracle_sql() -> str:
     tags=("similarity", "embedding", "lsh", "dedup", "iterative"),
 )
 def q_dbscan_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dbscan_lsh_clusters_impl(spark, sf_dir)
-
-
-def dbscan_lsh_clusters_impl(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n_planes: int | None = None,
-    n_bands: int = N_LSH_BANDS,
-) -> DataFrame:
-    """dbscan_lsh_clusters with the LSH sizing threaded through: the
-    catalog entry uses the oracle-pinned defaults; the scale measurement
-    (scripts/lsh_sizing_point.py) passes sized_lsh_params(N) so the
-    ε-neighborhood join runs at production bucket occupancy. NOTE: sized
-    buckets change which candidate pairs exist, so sized output is a
-    RECALL-reduced variant of the default clustering — comparable in
-    runtime shape, not hash-identical."""
-    pairs = embedding_lsh_pairs(
-        spark, sf_dir, DBSCAN_COS_EPS, n_planes=n_planes, n_bands=n_bands
-    ).select("vec_a", "vec_b")
+    pairs = embedding_lsh_pairs(spark, sf_dir, DBSCAN_COS_EPS).select(
+        "vec_a", "vec_b"
+    )
     sym = reliable_checkpoint(
         pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b")).union(
             pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"))
@@ -2876,7 +2791,7 @@ def _optics_oracle_sql() -> str:
     "queue; the per-cluster window keeps the ordering distributed (no "
     "global single-partition sort). Shares the dbscan_lsh_clusters "
     "candidate graph and min-label CC, so the bucketed-never-all-pairs "
-    "scale contract (and sized_lsh_params at production N) carries over.",
+    "scale contract (and bits-per-band ∝ log2 N at production N) carries over.",
     tags=("similarity", "embedding", "lsh", "iterative", "eval"),
 )
 def q_optics_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,7 @@ from ..functions.textfns import (
     char_ngrams_of_chars,
     ngrams_of_tokens,
     ngrams_sql as _ngrams_sql,
+    quality_score,
     tokens,
 )
 from ..plans.catalog import register
@@ -154,16 +155,11 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.col("_toks")
     n_tokens = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
-    quality = (
-        0.5 * (n_uniq.cast("double") / F.nullif(n_tokens, F.lit(0)))
-        + 0.3 * F.least(n_tokens / F.lit(20.0), F.lit(1.0))
-        + 0.2 * F.least(F.col("_len") / F.lit(100.0), F.lit(1.0))
-    )
     return docs.select(
         "doc_id",
         n_tokens.cast("bigint").alias("n_tokens"),
         n_uniq.cast("bigint").alias("n_uniq"),
-        F.round(quality, 6).alias("quality"),
+        F.round(quality_score(n_tokens, n_uniq, F.col("_len")), 6).alias("quality"),
     )
 
 
@@ -576,12 +572,8 @@ def q_top_bigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_lang_quality_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens("text")
-    n_tokens = F.size(toks)
-    n_uniq = F.size(F.array_distinct(toks))
-    quality = (
-        0.5 * (n_uniq.cast("double") / F.nullif(n_tokens, F.lit(0)))
-        + 0.3 * F.least(n_tokens / F.lit(20.0), F.lit(1.0))
-        + 0.2 * F.least(F.length("text") / F.lit(100.0), F.lit(1.0))
+    quality = quality_score(
+        F.size(toks), F.size(F.array_distinct(toks)), F.length("text")
     )
     return docs.groupBy("source", "lang").agg(
         F.count("*").alias("n_docs"),
@@ -1903,16 +1895,14 @@ def _bpe_oracle() -> str:
     return "WITH " + ",".join(parts) + "\n" + " UNION ALL ".join(rounds_sql)
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, n_rounds: int = BPE_ROUNDS):
-    """Run the BPE training loop for ``n_rounds`` merges; returns
+def _bpe_train(spark: SparkSession, sf_dir: str):
+    """Run the BPE training loop for BPE_ROUNDS merges; returns
     (words, out_rows) where ``words`` is the final (tok, s, cnt)
     encoded-vocabulary table and ``out_rows`` the per-round merge-rule
-    DataFrames. Shared by the training entry and bpe_apply_encode (both
-    keep the oracle-pinned BPE_ROUNDS default); scripts/bpe_round_cost.py
-    passes deeper depths to measure the sequential driver-round cost
-    (VERDICT r8 #7) — real tokenizers run thousands of merges, each an
-    inherently sequential argmax+replace over the Heaps-law distinct-word
-    table, never re-touching the corpus."""
+    DataFrames. Shared by the training entry and bpe_apply_encode. Real
+    tokenizers run thousands of merges, each an inherently sequential
+    argmax+replace over the Heaps-law distinct-word table, never
+    re-touching the corpus."""
     o, c, t = _BPE_O, _BPE_C, _BPE_T
     docs = load_table(spark, sf_dir, "documents")
     pre = (
@@ -1934,7 +1924,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, n_rounds: int = BPE_ROUNDS):
     )
     sep = c + o  # split separator between adjacent symbols (regex-safe: control chars)
     out_rows = []
-    for r in range(1, n_rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         # filter on the CHEAP raw-column predicate (a multi-symbol word
         # contains the close+open separator) BEFORE projecting the split:
         # filtering on size(tk) re-inlines split() into the pushed Filter

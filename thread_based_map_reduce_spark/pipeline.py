@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .functions.hashing import portable_hash64
-from .functions.textfns import tokens
+from .functions.textfns import quality_score, tokens
 from .operators.dedup import q_dedup_clusters
 from .sources.registry import load_table, write_sink
 
@@ -65,11 +65,7 @@ def curate_corpus(
     deduped = exact.join(F.broadcast(near_dups), "doc_id", "left_anti")
 
     # 3+4. quality + language gates (pure column math — no shuffle)
-    quality = (
-        0.5 * (F.col("_nu").cast("double") / F.nullif(F.col("_nt"), F.lit(0)))
-        + 0.3 * F.least(F.col("_nt") / F.lit(20.0), F.lit(1.0))
-        + 0.2 * F.least(F.length("text") / F.lit(100.0), F.lit(1.0))
-    )
+    quality = quality_score(F.col("_nt"), F.col("_nu"), F.length("text"))
     scored = deduped.withColumn("quality", F.round(quality, 6)).withColumn(
         "n_tokens", F.col("_nt").cast("bigint")
     )

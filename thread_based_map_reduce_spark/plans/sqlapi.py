@@ -18,13 +18,6 @@ from ..session import pin_session_defaults
 from ..sources.registry import TABLE_NAMES, load_table
 
 
-def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Create (or replace) a temp view per testdata table; returns names."""
-    pin_session_defaults(spark)
-    _register(spark, sf_dir, TABLE_NAMES)
-    return list(TABLE_NAMES)
-
-
 def _register(spark: SparkSession, sf_dir: str, names) -> None:
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -35,8 +35,8 @@ def get_spark(
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if extra_conf and SparkSession.getActiveSession() is not None:
         # getOrCreate silently ignores builder conf on reuse — a caller
-        # relying on static conf (e.g. shuffle_metrics.py's event log)
-        # would otherwise measure nothing with no error (ADVICE r6).
+        # relying on static conf (e.g. an event log) would otherwise
+        # measure nothing with no error (ADVICE r6).
         import warnings
 
         warnings.warn(
@@ -66,7 +66,7 @@ def get_spark(
     # Static conf (event log, etc.) for measurement harnesses; only
     # effective when this call actually CREATES the session — getOrCreate
     # ignores builder conf on reuse, so callers needing it must stop the
-    # active session first (scripts/shuffle_metrics.py does).
+    # active session first.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
