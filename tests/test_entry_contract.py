@@ -43,6 +43,28 @@ def test_catalog_order_is_deterministic():
     assert len(names) == 347
 
 
+def test_catalog_order_does_not_depend_on_import_order():
+    """A process that imported an operator module first lists the catalog
+    in the same order as a fresh one (what the driver sees)."""
+    import os
+    import subprocess
+    import sys
+
+    def order(first_import: str) -> list[str]:
+        code = first_import + "import __spark_entry__ as e; print(*e.queries())"
+        return subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            check=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ).stdout.split()
+
+    fresh = order("")
+    assert len(fresh) == 347
+    assert order("import thread_based_map_reduce_spark.operators.analytics; ") == fresh
+
+
 # The entries among the first 52 of a fresh process's registration order
 # (what a caller of __spark_entry__ sees) whose oracle reads `events`: the
 # ones a session timezone can move. In this process other test modules may

@@ -77,6 +77,24 @@ def test_stopped_sessions_entries_are_dropped(tmp_path):
     assert [k for k in registry._MEMO if k[1] == real] == [("app-3", real, "t")]
 
 
+def test_stopped_sessions_scratch_dirs_are_removed(tmp_path):
+    # the dirs a dropped entry's build made go with it; a rebuild within
+    # a live session keeps the old dir (a lazy frame may still read it)
+    d = _inputs(tmp_path)
+
+    def build():
+        return registry._scratch_dir("tbmr-memo-test-")
+
+    first = registry._input_memo(_session("app-1"), str(d), "t", build)
+    (d / "orders.parquet").write_bytes(b"aaaaaa")
+    rebuilt = registry._input_memo(_session("app-1"), str(d), "t", build)
+    assert rebuilt != first and os.path.isdir(first)
+    second = registry._input_memo(_session("app-2"), str(d), "t", build)
+    assert not os.path.exists(rebuilt)
+    assert os.path.isdir(second)
+    assert os.path.isdir(first)  # replaced, not dropped: stays until exit
+
+
 def test_unreadable_directory_builds_every_call(tmp_path):
     build = _builds()
     missing = str(tmp_path / "missing")

@@ -1,20 +1,26 @@
-"""Two-star connected components (Kiveris et al. SoCC'14).
+"""The engine's one connected-components kernel
+(``dedup.connected_components``): star-contraction rounds (Kiveris et al.
+SoCC'14) while the canonical edge set exceeds ``_CC_DRIVER_EDGES``, then a
+driver union-find.
 
-Checks the property that justifies shipping a second CC strategy next to
-min-label propagation: round count grows ~logarithmically in component
-size even on the worst case for propagation (a long chain, where
-propagation needs diameter-many rounds), while the fixpoint — every node
-labeled with its component's min id — is identical.
+With the budget at 0 every graph runs on the distributed rounds, whose
+round count must grow ~logarithmically in component size even on a long
+chain (diameter-many rounds for label propagation). A budget between 0
+and the edge count tests the hand-off from the rounds to the driver. Every
+path must reach the same fixpoint: each node labeled with its component's
+min id.
 """
 
 from __future__ import annotations
 
 import random
 
+import pytest
+
+from thread_based_map_reduce_spark.operators import dedup
 from thread_based_map_reduce_spark.operators.dedup import (
-    connected_components_twostar,
+    connected_components,
     q_dedup_clusters,
-    q_dedup_clusters_twostar,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -38,12 +44,19 @@ def _union_find_oracle(edges: list[tuple[int, int]]) -> dict[int, int]:
 
 
 def _run(spark, edges: list[tuple[int, int]], stats: dict | None = None):
-    df = spark.createDataFrame(edges, "u long, v long")
-    rows = connected_components_twostar(df, stats=stats).collect()
-    return {r.node: r.cluster for r in rows}
+    df = spark.createDataFrame(edges, "u int, v int")
+    out = connected_components(df, stats=stats)
+    assert out.schema.simpleString() == "struct<node:bigint,cluster:bigint>"
+    return {r.node: r.cluster for r in out.collect()}
 
 
-def test_chain_worst_case_logarithmic_rounds(spark):
+@pytest.fixture
+def rounds_only(monkeypatch):
+    """Budget 0: no graph is handed to the driver."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
+
+
+def test_chain_worst_case_logarithmic_rounds(spark, rounds_only):
     # a 64-node chain: min-label propagation needs ~63 rounds (diameter);
     # star contraction must stay logarithmic
     n = 64
@@ -51,10 +64,11 @@ def test_chain_worst_case_logarithmic_rounds(spark):
     stats: dict = {}
     got = _run(spark, edges, stats)
     assert got == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 14, f"expected O(log n) rounds, got {stats['rounds']}"
+    assert 1 <= stats["rounds"] <= 14, f"expected O(log n) rounds, got {stats['rounds']}"
+    assert stats["driver_edges"] is None
 
 
-def test_random_graphs_match_union_find(spark):
+def test_random_graphs_match_union_find(spark, rounds_only):
     rng = random.Random(1234)
     for trial in range(3):
         n = rng.randrange(5, 60)
@@ -72,14 +86,52 @@ def test_random_graphs_match_union_find(spark):
         assert got == _union_find_oracle(edges), f"trial {trial} diverged"
 
 
-def test_empty_edge_set(spark):
-    assert _run(spark, []) == {}
+def test_rounds_hand_off_to_driver(spark, monkeypatch):
+    # two 12-cliques (132 canonical edges) and the 64-node chain (63):
+    # star contraction cannot take a component below one edge per
+    # non-root node (22 + 63 = 85), so a budget of 100 is reached only
+    # after at least one round, and union-find finishes the graph
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 100)
+    cliques = [
+        (base + i, base + j)
+        for base in (1000, 2000)
+        for i in range(12)
+        for j in range(i + 1, 12)
+    ]
+    edges = cliques + [(i, i + 1) for i in range(63)]
+    stats: dict = {}
+    assert _run(spark, edges, stats) == _union_find_oracle(edges)
+    assert stats["rounds"] >= 1
+    assert 0 < stats["driver_edges"] <= 100
 
 
-def test_matches_label_propagation_on_testdata(spark):
-    prop = {(r.doc_id, r.cluster) for r in q_dedup_clusters(spark, SF).collect()}
-    star = {(r.doc_id, r.cluster) for r in q_dedup_clusters_twostar(spark, SF).collect()}
-    assert star == prop
+def test_small_graph_finishes_on_the_driver_without_rounds(spark):
+    edges = [(i, i + 1) for i in range(63)]
+    stats: dict = {}
+    assert _run(spark, edges, stats) == {i: 0 for i in range(64)}
+    assert stats == {"rounds": 0, "driver_edges": 63}
+
+
+def test_empty_edge_set(spark, monkeypatch):
+    df = spark.createDataFrame([], "u long, v long")
+    for budget in (dedup._CC_DRIVER_EDGES, 0):
+        monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", budget)
+        out = connected_components(df)
+        assert out.collect() == []
+        assert out.schema.simpleString() == "struct<node:bigint,cluster:bigint>"
+
+
+def test_driver_budget_does_not_change_testdata_clusters(spark, monkeypatch):
+    driver = {(r.doc_id, r.cluster) for r in q_dedup_clusters(spark, SF).collect()}
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
+    stats: dict = {}
+    real = dedup.connected_components
+    monkeypatch.setattr(
+        dedup, "connected_components", lambda e: real(e, stats=stats)
+    )
+    rounds = {(r.doc_id, r.cluster) for r in q_dedup_clusters(spark, SF).collect()}
+    assert stats["rounds"] >= 1
+    assert driver and rounds == driver
 
 
 def test_bfs_hops_stays_inside_seed_component(spark, sf_dir):

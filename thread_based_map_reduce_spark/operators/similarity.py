@@ -217,6 +217,21 @@ _LSH_TOPK_SQL_TAIL = f"""
     """
 
 
+def _embedding_bands(emb: DataFrame) -> DataFrame:
+    """(vec_id, band, bucket): one row per vector and band, the bucket
+    being the band's sign-LSH bits (``_bands_sql`` in the oracles)."""
+    bucket_cols = _band_buckets_spark("embedding")
+    return emb.select(
+        "vec_id",
+        F.explode(
+            F.array(*[
+                F.struct(F.lit(b).alias("band"), bucket_cols[b].alias("bucket"))
+                for b in range(N_LSH_BANDS)
+            ])
+        ).alias("bb"),
+    ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
 def lsh_candidates(emb: DataFrame, *, multiprobe: bool = False) -> DataFrame:
     """Distinct (qid, vec_id) candidate pairs from band-bucket collisions.
 
@@ -226,16 +241,7 @@ def lsh_candidates(emb: DataFrame, *, multiprobe: bool = False) -> DataFrame:
     bucket of the query's signature in each band: the exact bucket plus
     one flip per band bit, i.e. 1 + bits-per-band probes per band.
     """
-    bucket_cols = _band_buckets_spark("embedding")
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), bucket_cols[b].alias("bucket"))
-                for b in range(N_LSH_BANDS)
-            ])
-        ).alias("bb"),
-    ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    bands = _embedding_bands(emb)
 
     qb = bands.where(F.col("vec_id") < N_QUERIES)
     if multiprobe:
@@ -892,17 +898,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (vec_a, vec_b) candidate pairs (a < b) from band-bucket
     collisions — the blocking stage alone, BEFORE cosine verification."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    bucket_cols = _band_buckets_spark("embedding")
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), bucket_cols[b].alias("bucket"))
-                for b in range(N_LSH_BANDS)
-            ])
-        ).alias("bb"),
-    ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    bands = _embedding_bands(load_table(spark, sf_dir, "embeddings"))
     # Checkpoint the narrow (vec_id, band, bucket) table (the r6
     # checkpoint-placement rule): bands feeds BOTH sides of the bucket
     # self-join, and without the lineage cut each side re-runs the
@@ -2571,6 +2567,37 @@ def _dbscan_oracle_sql() -> str:
     """
 
 
+def _density_clusters(sym: DataFrame, cores: DataFrame) -> DataFrame:
+    """DBSCAN labels over the neighbor graph ``sym`` (``a``/``b``, both
+    directions): ``(vec_id, cluster, is_core)`` for every core and border
+    vector. Cores take the min core vec_id of their connected component
+    over core-core edges (``dedup.connected_components``); a core with no
+    core neighbor never enters that edge set and labels itself. Borders
+    (non-cores with a core neighbor) attach to the MIN core-neighbor label,
+    which makes the border assignment deterministic."""
+    from .dedup import connected_components
+
+    cc = connected_components(
+        sym.join(cores.select(F.col("vec_id").alias("a")), "a")
+        .join(cores.select(F.col("vec_id").alias("b")), "b")
+        .select(F.col("a").alias("u"), F.col("b").alias("v"))
+    )
+    isolated = cores.join(
+        cc.select(F.col("node").alias("vec_id")), "vec_id", "left_anti"
+    ).select("vec_id", F.col("vec_id").alias("cluster"))
+    core_label = cc.select(F.col("node").alias("vec_id"), "cluster").unionByName(isolated)
+    border_label = (
+        sym.join(core_label.select(F.col("vec_id").alias("b"), "cluster"), "b")
+        .join(cores.select(F.col("vec_id").alias("a")), "a", "left_anti")
+        .groupBy("a")
+        .agg(F.min("cluster").alias("cluster"))
+        .select(F.col("a").alias("vec_id"), "cluster")
+    )
+    return core_label.withColumn("is_core", F.lit(True)).unionByName(
+        border_label.withColumn("is_core", F.lit(False))
+    )
+
+
 @register(
     "dbscan_lsh_clusters",
     oracle=_dbscan_oracle_sql(),
@@ -2580,13 +2607,14 @@ def _dbscan_oracle_sql() -> str:
     "embedding_lsh_pairs primitive at a looser ε than the 0.4 dedup "
     f"threshold), cores have >= {DBSCAN_MIN_PTS} neighbors, clusters are "
     "connected components over core-core edges via the dedup_clusters "
-    "min-label loop (cluster id = min core vec_id), borders attach to the "
+    "CC kernel (cluster id = min core vec_id), borders attach to the "
     "MIN core-neighbor label (plain DBSCAN leaves border assignment "
     "order-dependent; min makes it deterministic for the oracle), the "
     "rest is noise. Semantics are defined over the LSH candidate graph "
     "on purpose — at 100 TB the ε-neighborhood query IS the bucketed "
-    "candidate join (never all-pairs); the iterative core-CC rounds "
-    "touch only core-core edges, a shrinking subgraph. HONEST scale "
+    "candidate join (never all-pairs); the core CC sees only core-core "
+    "edges, runs star-contraction rounds while they exceed the driver "
+    "edge budget and finishes with a driver union-find. HONEST scale "
     "caveat (measured r7): with the testdata's recall-sized 4-bit "
     "buckets the candidate fraction is ~23% of all pairs, so 10x "
     "vectors → ~100x candidates and the measured 10x point is 12.9x "
@@ -2615,44 +2643,7 @@ def q_dbscan_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left",
     ).select("vec_id", F.coalesce("degree", F.lit(0)).cast("bigint").alias("degree"))
     cores = deg.where(F.col("degree") >= DBSCAN_MIN_PTS).select("vec_id")
-    core_sym = reliable_checkpoint(
-        sym.join(cores.select(F.col("vec_id").alias("a")), "a")
-        .join(cores.select(F.col("vec_id").alias("b")), "b")
-        .select("a", "b")
-    )
-    # min-label propagation over cores only (the dedup_clusters loop:
-    # exact decimal label-sum as the convergence check, checkpoint per
-    # round so the plan stays O(1) in rounds)
-    labels = reliable_checkpoint(
-        cores.select(F.col("vec_id").alias("node"), F.col("vec_id").alias("label"))
-    )
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(label_sum).first()[0]
-    while True:
-        nbr = core_sym.join(labels, core_sym["a"] == labels["node"]).select(
-            F.col("b").alias("node"), "label"
-        )
-        new_labels = reliable_checkpoint(
-            labels.union(nbr).groupBy("node").agg(F.min("label").alias("label"))
-        )
-        new_sum = new_labels.agg(label_sum).first()[0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    core_label = labels.select(F.col("node").alias("vec_id"), F.col("label").alias("cluster"))
-    border_label = (
-        sym.join(
-            core_label.select(F.col("vec_id").alias("b"), "cluster"), "b"
-        )
-        .join(cores.select(F.col("vec_id").alias("a")), "a", "left_anti")
-        .groupBy("a")
-        .agg(F.min("cluster").alias("cluster"))
-        .select(F.col("a").alias("vec_id"), "cluster")
-    )
-    cl = core_label.withColumn("is_core", F.lit(True)).unionByName(
-        border_label.withColumn("is_core", F.lit(False))
-    )
+    cl = _density_clusters(sym, cores)
     return (
         deg.join(cl, "vec_id", "left")
         .select(
@@ -2790,8 +2781,9 @@ def _optics_oracle_sql() -> str:
     "cluster — the plot a pipeline reads — rather than replaying the "
     "queue; the per-cluster window keeps the ordering distributed (no "
     "global single-partition sort). Shares the dbscan_lsh_clusters "
-    "candidate graph and min-label CC, so the bucketed-never-all-pairs "
-    "scale contract (and bits-per-band ∝ log2 N at production N) carries over.",
+    "candidate graph and core-CC helper (the dedup_clusters kernel), so "
+    "the bucketed-never-all-pairs scale contract (and bits-per-band ∝ "
+    "log2 N at production N) carries over.",
     tags=("similarity", "embedding", "lsh", "iterative", "eval"),
 )
 def q_optics_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2824,39 +2816,7 @@ def q_optics_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.greatest("core_dist", "d")).alias("reach"))
         .select(F.col("a").alias("vec_id"), "reach")
     )
-    cores = core_dist.select("vec_id")
-    core_sym = reliable_checkpoint(
-        sym.join(cores.select(F.col("vec_id").alias("a")), "a")
-        .join(cores.select(F.col("vec_id").alias("b")), "b")
-        .select("a", "b")
-    )
-    # Core-CC via alternating large-star/small-star contraction (Kiveris
-    # et al. SoCC'14) — O(log n) rounds regardless of component diameter,
-    # replacing the r8 min-label loop whose round count was
-    # O(component-diameter) with one .first() per round (VERDICT r8 #8).
-    # Same fixpoint (node -> component-min), so the recursive-CTE oracle
-    # is untouched. Isolated cores (no core-core edge) never enter the
-    # edge set; they label themselves, exactly as the propagation loop's
-    # all-cores seed did.
-    from ..operators.dedup import connected_components_twostar
-
-    cc = connected_components_twostar(
-        core_sym.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    )
-    isolated = cores.join(
-        cc.select(F.col("node").alias("vec_id")), "vec_id", "left_anti"
-    ).select("vec_id", F.col("vec_id").alias("cluster"))
-    core_label = cc.select(
-        F.col("node").alias("vec_id"), F.col("cluster")
-    ).unionByName(isolated)
-    border_label = (
-        sym.join(core_label.select(F.col("vec_id").alias("b"), "cluster"), "b")
-        .join(cores.select(F.col("vec_id").alias("a")), "a", "left_anti")
-        .groupBy("a")
-        .agg(F.min("cluster").alias("cluster"))
-        .select(F.col("a").alias("vec_id"), "cluster")
-    )
-    cl = core_label.unionByName(border_label)
+    cl = _density_clusters(sym, core_dist.select("vec_id"))
     assigned = (
         deg.join(core_dist, "vec_id", "left")
         .join(reach, "vec_id", "left")

@@ -37,6 +37,7 @@ Conventions that keep the order-insensitive value-hash comparison honest
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -157,6 +158,7 @@ def register(
             return fn(spark, sf_dir)
 
         pinned.__name__ = fn.__name__
+        pinned.__module__ = fn.__module__
         pinned.__doc__ = fn.__doc__
         CATALOG[name] = Query(name=name, fn=pinned, oracle=oracle, doc=doc, tags=tags)
         return fn
@@ -164,27 +166,29 @@ def register(
     return wrap
 
 
+# The operator modules, in the order their entries are listed; within a
+# module, entries keep their registration order.
+_MODULES = (
+    "relational", "relational_ext", "relational_more", "tpch_suite",
+    "mapreduce_queries", "dedup", "similarity", "text", "multimodal",
+    "multimodal_jpeg", "curation", "layout", "diagnostics",
+    "streaming_runtime", "analytics", "engineering", "ml",
+)
+
+
 def _load_all() -> None:
-    """Import every operator module for its registration side effects."""
-    from ..operators import (  # noqa: F401
-        relational,
-        relational_ext,
-        relational_more,
-        tpch_suite,
-        mapreduce_queries,
-        dedup,
-        similarity,
-        text,
-        multimodal,
-        multimodal_jpeg,
-        curation,
-        layout,
-        diagnostics,
-        streaming_runtime,
-        analytics,
-        engineering,
-        ml,
-    )
+    """Import every operator module for its registration side effects, then
+    put ``CATALOG`` in ``_MODULES`` order. Modules import each other, so
+    registration order alone depends on which module a process imported
+    first."""
+    operators = __package__.rsplit(".", 1)[0] + ".operators"
+    for m in _MODULES:
+        importlib.import_module(f"{operators}.{m}")
+    rank = {f"{operators}.{m}": i for i, m in enumerate(_MODULES)}
+    ordered = sorted(CATALOG.items(), key=lambda kv: rank[kv[1].fn.__module__])
+    if [name for name, _ in ordered] != list(CATALOG):
+        CATALOG.clear()
+        CATALOG.update(ordered)
 
 
 def queries() -> dict[str, QueryFn]:

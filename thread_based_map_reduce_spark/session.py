@@ -91,7 +91,7 @@ def reliable_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and truncate its lineage, fault-tolerantly when
     the session allows it (VERDICT r2 "what's wrong" #2).
 
-    Iterative pipelines (``dedup_clusters`` label propagation,
+    Iterative pipelines (``connected_components`` star-contraction rounds,
     ``kmeans_train`` Lloyd rounds) and multi-consumer intermediates (the
     MinHash signature table) must cut lineage each round or the plan grows
     without bound. ``localCheckpoint()`` does that but stores blocks on

@@ -142,7 +142,11 @@ def _normalize_event_ts(raw: "DataFrame"):
 # every builder shares one rule for when an artifact may be reused.
 # Reentrant: builds nest (the curation flag build calls other builders).
 _MEMO_LOCK = threading.RLock()
-_MEMO: dict[tuple[str, str, str], tuple[tuple, object]] = {}
+# key -> (input version, artifact, scratch dirs its build made)
+_MEMO: dict[tuple[str, str, str], tuple[tuple, object, tuple[str, ...]]] = {}
+# Per thread, one list per memo build in progress: ``_scratch_dir``
+# records each directory it makes in the innermost one.
+_BUILDS = threading.local()
 
 
 def _input_version(sf_dir: str) -> tuple | None:
@@ -166,28 +170,43 @@ def _input_memo(spark: SparkSession, sf_dir: str, name: str, build):
     artifact: a changed version rebuilds and replaces the entry. A
     directory that cannot be read is not memoized. A process has one
     live SparkContext, so entries of any other applicationId belong to
-    stopped sessions and are dropped."""
+    stopped sessions and are dropped, together with the ``_scratch_dir``
+    directories their builds made. An entry rebuilt within a live session
+    keeps its old directories until interpreter exit: a caller may still
+    hold a lazy frame over them."""
     real = os.path.realpath(sf_dir)
     app = spark.sparkContext.applicationId
     key = (app, real, name)
     with _MEMO_LOCK:
         for stale in [k for k in _MEMO if k[0] != app]:
-            del _MEMO[stale]
+            for path in _MEMO.pop(stale)[2]:
+                shutil.rmtree(path, ignore_errors=True)
         version = _input_version(real)
         if version is None:
             return build()
         hit = _MEMO.get(key)
         if hit is not None and hit[0] == version:
             return hit[1]
-        value = build()
-        _MEMO[key] = (version, value)
+        if not hasattr(_BUILDS, "dirs"):
+            _BUILDS.dirs = []
+        builds = _BUILDS.dirs
+        builds.append([])
+        try:
+            value = build()
+        finally:
+            dirs = builds.pop()
+        _MEMO[key] = (version, value, tuple(dirs))
         return value
 
 
 def _scratch_dir(prefix: str) -> str:
-    """A fresh temporary directory, removed at interpreter exit."""
+    """A fresh temporary directory, removed when the ``_input_memo`` entry
+    whose build made it is dropped, else at interpreter exit."""
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
+    builds = getattr(_BUILDS, "dirs", None)
+    if builds:
+        builds[-1].append(path)
     return path
 
 
