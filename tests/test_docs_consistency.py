@@ -134,6 +134,36 @@ def test_minhash_lsh_kernel_is_defined_once():
     assert not stray, stray
 
 
+def test_one_bucketed_writer():
+    # One bucketed writer, operators/layout.py:write_bucketed, sized by the
+    # session's shuffle width: bucketBy is called nowhere else in the
+    # engine, and no module keeps a fixed bucket count of its own.
+    sources = _package_sources()
+    layout = os.path.join("operators", "layout.py")
+    span = next(
+        (node.lineno, node.end_lineno)
+        for node in ast.parse(sources[layout]).body
+        if isinstance(node, ast.FunctionDef) and node.name == "write_bucketed"
+    )
+    sites = [
+        (rel, lineno)
+        for rel, src in sources.items()
+        for lineno, line in enumerate(src.splitlines(), 1)
+        if "bucketBy(" in line
+    ]
+    assert len(sites) == 1, sites
+    assert sites[0][0] == layout and span[0] <= sites[0][1] <= span[1], sites
+    constants = [
+        f"{rel}:{node.lineno}"
+        for rel, src in sources.items()
+        for node in ast.parse(src).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for target in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(target, ast.Name) and target.id in ("_LSH_SIG_BUCKETS", "BKT_N")
+    ]
+    assert not constants, constants
+
+
 def test_quality_score_has_one_spark_definition():
     # The doc quality score's Spark expression lives in
     # functions/textfns.quality_score; every Spark site calls it (the

@@ -898,3 +898,74 @@ def test_cosine_verify_dot_is_staged(spark, sf_dir, name):
                 f"{name}: dot-product fold re-inlined into a Filter — "
                 f"stage it as _dot before the where: {cm.group(1)[:200]}"
             )
+
+
+def _python_rdd_scans(df) -> list[str]:
+    """Scans in ``df``'s physical plan that read a Python RDD: what
+    ``createDataFrame`` of Python rows plans as (``Scan ExistingRDD`` over
+    a ``PythonRDD``, unpickled by Python workers). A pyarrow table plans as
+    a ``LocalTableScan``; checkpoint scans have no Python lineage."""
+
+    def nodes(plan):
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        yield plan
+        children = plan.children()
+        for i in range(children.size()):
+            yield from nodes(children.apply(i))
+
+    return [
+        node.toString()
+        for node in nodes(df._jdf.queryExecution().executedPlan())
+        if node.getClass().getSimpleName() == "RDDScanExec"
+        and re.search(r"\bPythonRDD\[\d+\]", node.rdd().toDebugString())
+    ]
+
+
+def _kmeans(spark, sf_dir, monkeypatch):
+    from thread_based_map_reduce_spark.operators.similarity import kmeans_train
+
+    return kmeans_train(spark, sf_dir, k=4, iters=1)[0]
+
+
+def _kmeans_exact(spark, sf_dir, monkeypatch):
+    from thread_based_map_reduce_spark.operators.similarity import kmeans_train_exact
+
+    return kmeans_train_exact(spark, sf_dir, k=4, iters=1)[0]
+
+
+def _jaccard_hot_block(spark, sf_dir, monkeypatch):
+    import pyarrow as pa
+
+    from thread_based_map_reduce_spark.operators import dedup
+
+    # the hot-block anti-join feeds a checkpoint; without it the anti-join
+    # stays in the returned frame's plan
+    monkeypatch.setattr(dedup, "reliable_checkpoint", lambda df: df)
+    spam = [f"spam spam spam spam {i % 2}" for i in range(12)]
+    docs = spark.createDataFrame(
+        pa.table({
+            "doc_id": pa.array(range(14), pa.int64()),
+            "lang": ["en", "en"] + ["xx"] * 12,
+            "text": ["a b c d e f", "a b c d e g"] + spam,
+        })
+    )
+    return dedup.jaccard_blocked_pairs(docs, max_block=10)
+
+
+def _approx_quantiles(spark, sf_dir, monkeypatch):
+    from thread_based_map_reduce_spark.operators.analytics import q_approx_quantile_eval
+
+    return q_approx_quantile_eval(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "build", [_kmeans, _kmeans_exact, _jaccard_hot_block, _approx_quantiles],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_driver_built_frames_are_local_table_scans(spark, sf_dir, monkeypatch, build):
+    # centroids, hot blocks and quantile lists are built on the driver;
+    # reading them must not start Python workers
+    df = build(spark, sf_dir, monkeypatch)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert not _python_rdd_scans(df)

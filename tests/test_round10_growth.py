@@ -13,9 +13,14 @@
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
+import shutil
 import struct
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from thread_based_map_reduce_spark.operators.dedup import (
     _SPAN_MIN_TOKENS,
@@ -243,6 +248,163 @@ def test_lsh_verify_join_rides_bucketing(spark, sf_dir):
     for line in plan.splitlines():
         if "Exchange" in line and "tbmr_lsh_sig" in line:
             raise AssertionError(f"signature scan is being exchanged: {line}")
+
+
+@contextlib.contextmanager
+def _shuffle_width(spark, n: int):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@pytest.fixture
+def saved(monkeypatch):
+    """(table, frame) of every saveAsTable call made while it is active."""
+    calls = []
+    save = DataFrameWriter.saveAsTable
+
+    def record(writer, name, *args, **kwargs):
+        calls.append((name, writer._df))
+        return save(writer, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", record)
+    return calls
+
+
+def _inputs(sf_dir, tmp_path, *tables):
+    """A fresh input directory holding copies of ``tables``, so the
+    memoized builds run again inside the test."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    for t in tables:
+        shutil.copyfile(os.path.join(sf_dir, f"{t}.parquet"), d / f"{t}.parquet")
+    return str(d)
+
+
+def _nodes(plan):
+    """Every node of a physical plan, looking inside AQE's wrapper."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan()
+
+
+def _catalog_layout(spark, table: str) -> tuple[int, list[str]]:
+    """(Num Buckets, data files) of a catalog table."""
+    info = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    path = info["Location"].removeprefix("file:")
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    return int(info["Num Buckets"]), files
+
+
+def _assert_bucketed_write(spark, table, frame, key, columns, n):
+    """The table has n buckets and at most n files, and the write's only
+    Exchange hash-partitions ``key`` into n over exactly ``columns``, so
+    any derivation runs above it."""
+    buckets, files = _catalog_layout(spark, table)
+    assert buckets == n
+    assert len(files) <= n, files
+    exchanges = [x for x in _nodes(_plan(frame)) if "Exchange" in x.nodeName()]
+    assert len(exchanges) == 1, [x.nodeName() for x in exchanges]
+    [ex] = exchanges
+    assert re.fullmatch(
+        rf"hashpartitioning\({key}#\d+L?, {n}\)", ex.outputPartitioning().toString()
+    ), ex.outputPartitioning().toString()
+    out = ex.child().output()
+    assert [out.apply(i).name() for i in range(out.size())] == columns
+
+
+def _assert_no_exchange_below_joins(df, *, sides=(1,)):
+    """Each SortMergeJoin's ``sides`` read their bucketed scan with no
+    Exchange or Sort in between."""
+    joins = [x for x in _nodes(_plan(df)) if x.nodeName() == "SortMergeJoin"]
+    assert joins
+    for join in joins:
+        for side in sides:
+            below = [x.nodeName() for x in _nodes(join.children().apply(side))]
+            assert not [n for n in below if "Exchange" in n or n == "Sort"], below
+            assert any(n.startswith("Scan") or "FileScan" in n for n in below), below
+
+
+def test_lsh_signature_table_buckets_at_the_shuffle_width(spark, sf_dir, tmp_path, saved):
+    """The signature table has as many buckets as the shuffle width at
+    build time; the signature pass runs after the doc_id exchange, which
+    carries only (doc_id, text); a later width change leaves the verify
+    join's signature side unshuffled and its pairs unchanged."""
+    from thread_based_map_reduce_spark.operators.dedup import (
+        _bucketed_lsh_signatures,
+        _lsh_verified_pairs,
+    )
+
+    d = _inputs(sf_dir, tmp_path, "documents")
+    with _shuffle_width(spark, 3):
+        _bucketed_lsh_signatures(spark, d)
+        built = set(_lsh_verified_pairs(spark, d).collect())
+    [(table, frame)] = saved
+    _assert_bucketed_write(spark, table, frame, "doc_id", ["doc_id", "text"], 3)
+    assert built
+    with _shuffle_width(spark, 7):
+        pairs = _lsh_verified_pairs(spark, d)
+        _assert_no_exchange_below_joins(pairs)
+        assert set(pairs.collect()) == built
+    assert len(saved) == 1  # memoized: the width change did not rebuild
+
+
+def test_layout_tables_bucket_at_the_shuffle_width(spark, sf_dir, tmp_path, saved):
+    """orders/lineitem go through the same writer: n buckets at build
+    time, one key exchange over the selected columns, and the co-located
+    join stays exchange- and sort-free after the width changes."""
+    from thread_based_map_reduce_spark.operators.layout import (
+        _bucketed_tables,
+        q_bucketed_join_revenue,
+    )
+
+    d = _inputs(sf_dir, tmp_path, "orders", "lineitem")
+    with _shuffle_width(spark, 3):
+        _bucketed_tables(spark, d)
+    (t_orders, orders), (t_lineitem, lineitem) = saved
+    _assert_bucketed_write(
+        spark, t_orders, orders, "o_orderkey",
+        ["o_orderkey", "o_orderpriority", "o_orderdate"], 3,
+    )
+    _assert_bucketed_write(
+        spark, t_lineitem, lineitem, "l_orderkey",
+        ["l_orderkey", "l_extendedprice", "l_discount"], 3,
+    )
+    with _shuffle_width(spark, 7):
+        _assert_no_exchange_below_joins(q_bucketed_join_revenue(spark, d), sides=(0, 1))
+
+
+@pytest.mark.parametrize("n_docs", [0, 2])
+def test_tiny_corpus_writes_at_most_one_file_per_bucket(
+    spark, sf_dir, tmp_path, saved, n_docs
+):
+    import pyarrow.parquet as pq
+
+    from thread_based_map_reduce_spark.operators.dedup import _bucketed_lsh_signatures
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(docs.slice(0, n_docs), d / "documents.parquet")
+    with _shuffle_width(spark, 3):
+        sig = _bucketed_lsh_signatures(spark, str(d))
+    assert sig.count() <= n_docs
+    [(table, _)] = saved
+    buckets, files = _catalog_layout(spark, table)
+    assert buckets == 3 and len(files) <= 3, files
 
 
 def test_hilbert_transform_is_the_hilbert_curve(spark):

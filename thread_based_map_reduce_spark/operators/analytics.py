@@ -20,6 +20,7 @@ works entirely on the tiny (hour × type) aggregate grid.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..plans.catalog import register
@@ -1625,7 +1626,7 @@ def q_approx_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     qs = orders.sparkSession.createDataFrame(
-        [(q,) for q in AQ_QS], "q double"
+        pa.table({"q": pa.array(AQ_QS, pa.float64())}), "q double"
     )
     pick = (
         cum.crossJoin(F.broadcast(bounds))

@@ -379,49 +379,41 @@ def q_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_verified_pairs(spark, sf_dir)
 
 
-_LSH_SIG_BUCKETS = 32
-
-
 def _bucketed_lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, mh0..mh7, ts) signature frame persisted ONCE per
     input version (``_input_memo``) as a doc_id-BUCKETED, doc_id-sorted
-    table (round-10 fix for the r9 verify-join regression): the
-    exact-Jaccard verify then rides the bucketed-join machinery — a
-    SortMergeJoin whose corpus-sized signature side has ZERO Exchange and
-    ZERO Sort; only the (sparse) candidate side shuffles. This replaces
-    the r9 shape that shuffled the whole checkpointed tset table once per
-    verify side, while
-    keeping the plan corpus-broadcast-free (the r9 audit's invariant:
-    a merge hint can never degrade to a broadcast). It is also the
-    honest 100 TB layout: the signature store is written once at ingest,
+    table through ``layout.write_bucketed``: the exact-Jaccard verify then
+    rides the bucketed-join machinery — a SortMergeJoin whose corpus-sized
+    signature side has ZERO Exchange and ZERO Sort; only the (sparse)
+    candidate side shuffles. The plan stays corpus-broadcast-free (a merge
+    hint can never degrade to a broadcast), and parquet stats make the
+    scan AQE-sizable.
+
+    The exchange runs on ``(doc_id, text)`` and the signature pass after
+    it: the raw text is smaller than 8 minhashes plus the shingle-hash
+    array, and the tokenize/hash/permute map then runs on all n write
+    tasks (n = the session's shuffle width at build time, also the bucket
+    count) instead of on the documents file's few splits. This is also
+    the layout at scale: the signature store is written once at ingest,
     bucketed by doc_id, and every downstream verify/fetch is
-    bucket-local. Parquet stats make the scan AQE-sizable — unlike the
-    ExistingRDD checkpoint scans the r9 audit had to pin."""
+    bucket-local."""
     import hashlib
     import os
 
-    from .layout import _one_file_per_bucket
+    from .layout import write_bucketed
 
     def build() -> str:
         tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
-        t_sig = f"tbmr_lsh_sig_{tag}"
-        scratch = _scratch_dir("tbmr-lsh-sig-")
-        combined = _signature_combined(
-            load_table(spark, sf_dir, "documents"), checkpoint=False
+        return write_bucketed(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+            "doc_id",
+            f"tbmr_lsh_sig_{tag}",
+            f"{_scratch_dir('tbmr-lsh-sig-')}/signatures",
+            lambda docs: _signature_combined(docs, checkpoint=False),
         )
-        (
-            combined.repartition(_LSH_SIG_BUCKETS, F.col("doc_id"))
-            .write.bucketBy(_LSH_SIG_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .option("path", f"{scratch}/signatures")
-            .mode("overwrite")
-            .saveAsTable(t_sig)
-        )
-        _one_file_per_bucket(f"{scratch}/signatures", _LSH_SIG_BUCKETS)
-        return t_sig
 
     t_sig = _input_memo(spark, sf_dir, "lsh_signatures", build)
-    # sound because every bucketed writer in this repo enforces the
+    # sound because the engine's one bucketed writer enforces the
     # at-most-one-file-per-bucket invariant at write time (layout.py)
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     return spark.table(t_sig)
@@ -930,7 +922,10 @@ def jaccard_blocked_pairs(
             "banded MinHash path",
             len(hot), max_block, sum(n for _, n in hot), hot[:20],
         )
-        hot_df = spark.createDataFrame([(lang,) for lang, _ in hot], "lang string")
+        hot_df = spark.createDataFrame(
+            pa.table({"lang": pa.array([lang for lang, _ in hot], pa.string())}),
+            "lang string",
+        )
         # anti-join, not isin(): a literal IN-list grows the plan with the
         # number of hot blocks
         docs = docs.join(F.broadcast(hot_df), "lang", "left_anti")

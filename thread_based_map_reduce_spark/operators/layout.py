@@ -42,6 +42,8 @@ reference keeps everything in one address space, so layout is moot there.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from ..plans.catalog import register
@@ -552,19 +554,51 @@ def q_hilbert_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- bucketed co-located join: the shuffle-free big-x-big path (round 9) ------
 
-BKT_N = 8  # bucket count; production sizes this to cluster parallelism
+def write_bucketed(
+    frame: DataFrame,
+    key: str,
+    table: str,
+    path: str,
+    derive: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> str:
+    """Write ``derive(frame)`` as the EXTERNAL table ``table`` at
+    ``path``, bucketed and sorted on ``key``; returns ``table``. The
+    engine's one bucketed writer.
+
+    The bucket count n is the session's ``spark.sql.shuffle.partitions``
+    at write time, the width ``run_map_reduce`` shuffles to. ``frame`` is
+    hash-partitioned on ``key`` into n BEFORE ``derive`` runs, so the
+    exchange carries the input and the per-row derivation runs on all n
+    tasks, not on the source's few splits. ``derive`` must keep the
+    partitioning (row-wise projections and filters do): repartition and
+    bucketing share the murmur3-mod hash, so each write task holds one
+    bucket and writes one sorted file, which ``_one_file_per_bucket``
+    asserts. A table keeps its n when the width changes later; the
+    planner shuffles the other join side to it."""
+    n = int(frame.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    (
+        derive(frame.repartition(n, F.col(key)))
+        .write.bucketBy(n, key)
+        .sortBy(key)
+        .option("path", path)
+        .mode("overwrite")
+        .saveAsTable(table)
+    )
+    _one_file_per_bucket(path, n)
+    return table
+
 
 def _one_file_per_bucket(path: str, n_buckets: int) -> None:
-    """Guard the one-file-per-bucket invariant every bucketed writer in
-    this repo must preserve: queries turn on
-    spark.sql.legacy.bucketedTableScan.outputOrdering, which is only
-    sound when each bucket holds AT MOST one sorted file — multiple files
-    per bucket would get a falsely-assumed sort order and could silently
-    corrupt sort-merge joins (ADVICE r9). The repartition(n, key) before
-    bucketBy guarantees it; this assert makes a future writer that drops
-    the repartition fail loudly at write time instead. (Buckets may be
-    EMPTY — tiny/empty corpora in the input sweeps legitimately write
-    fewer files than buckets; emptiness carries no sort-order hazard.)"""
+    """Guard the one-file-per-bucket invariant of ``write_bucketed``:
+    queries turn on spark.sql.legacy.bucketedTableScan.outputOrdering,
+    which is only sound when each bucket holds AT MOST one sorted file —
+    multiple files per bucket would get a falsely-assumed sort order and
+    could silently corrupt sort-merge joins (ADVICE r9). The
+    repartition(n, key) before bucketBy guarantees it; this assert makes a
+    ``derive`` that breaks the partitioning fail loudly at write time
+    instead. (Buckets may be EMPTY — tiny/empty corpora in the input
+    sweeps legitimately write fewer files than buckets; emptiness carries
+    no sort-order hazard.)"""
     import os
     import re
 
@@ -604,36 +638,23 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     def build() -> tuple[str, str]:
         tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
-        t_orders = f"tbmr_bkt_orders_{tag}"
-        t_lineitem = f"tbmr_bkt_lineitem_{tag}"
         scratch = _scratch_dir("tbmr-bucketed-")
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority", "o_orderdate")
-            # one write task per bucket (repartition uses the same
-            # murmur3-mod hash family as bucketing) -> exactly ONE
-            # sorted file per bucket, which is what lets the reader
-            # drop the per-query Sort below the SortMergeJoin
-            .repartition(BKT_N, F.col("o_orderkey"))
-            .write.bucketBy(BKT_N, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", f"{scratch}/orders")
-            .mode("overwrite")
-            .saveAsTable(t_orders)
+        orders = load_table(spark, sf_dir, "orders")
+        lineitem = load_table(spark, sf_dir, "lineitem")
+        return (
+            write_bucketed(
+                orders.select("o_orderkey", "o_orderpriority", "o_orderdate"),
+                "o_orderkey",
+                f"tbmr_bkt_orders_{tag}",
+                f"{scratch}/orders",
+            ),
+            write_bucketed(
+                lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
+                "l_orderkey",
+                f"tbmr_bkt_lineitem_{tag}",
+                f"{scratch}/lineitem",
+            ),
         )
-        _one_file_per_bucket(f"{scratch}/orders", BKT_N)
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .repartition(BKT_N, F.col("l_orderkey"))
-            .write.bucketBy(BKT_N, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{scratch}/lineitem")
-            .mode("overwrite")
-            .saveAsTable(t_lineitem)
-        )
-        _one_file_per_bucket(f"{scratch}/lineitem", BKT_N)
-        return t_orders, t_lineitem
 
     return _input_memo(spark, sf_dir, "bucketed_tables", build)
 
@@ -650,8 +671,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         GROUP BY o.o_orderpriority
     """,
     doc="The co-located big-x-big join: orders and lineitem are written "
-    f"ONCE as bucketed tables ({BKT_N} buckets on the order key, "
-    "sorted within bucket) into a scratch warehouse, then joined "
+    "ONCE as bucketed tables (bucketed on the order key into as many "
+    "buckets as the session's shuffle width, sorted within bucket) into "
+    "a scratch warehouse, then joined "
     "bucket-to-bucket — the SortMergeJoin consumes both scans with ZERO "
     "Exchange and ZERO per-query Sort on the join side "
     "(tests/test_round9_growth.py asserts both against the plan; a merge "
@@ -668,9 +690,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def q_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_orders, t_lineitem = _bucketed_tables(spark, sf_dir)
     # Spark 3+ ignores within-bucket sort order by default (SPARK-24528);
-    # with exactly one file per bucket (the repartition above guarantees
-    # it, and _one_file_per_bucket ASSERTS it at write time for every
-    # bucketed table this repo creates) the order IS reliable, so opt
+    # with exactly one file per bucket (write_bucketed's repartition
+    # guarantees it, and _one_file_per_bucket ASSERTS it at write time for
+    # every bucketed table this repo creates) the order IS reliable, so opt
     # back in — this is what removes the per-query Sort below the
     # SortMergeJoin. Plan-time conf, consulted only for bucketed scans;
     # it stays set for the session, which is sound exactly because the

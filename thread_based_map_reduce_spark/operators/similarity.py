@@ -27,6 +27,7 @@ distance math (averaging order differs between engines at the ulp level).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions.vectors import cosine_similarity
@@ -593,10 +594,13 @@ def kmeans_train(
     assign = None
     for _ in range(iters):
         cents_df = spark.createDataFrame(
-            [
-                (int(ci), [float(x) for x in c], float(sum(x * x for x in c)))
-                for ci, c in centroids
-            ],
+            pa.table({
+                "ci": pa.array([ci for ci, _ in centroids], pa.int32()),
+                "c": pa.array([c for _, c in centroids], pa.list_(pa.float64())),
+                "cn2": pa.array(
+                    [float(sum(x * x for x in c)) for _, c in centroids], pa.float64()
+                ),
+            }),
             "ci int, c array<double>, cn2 double",
         ).agg(F.array_sort(F.collect_list(F.struct("ci", "c", "cn2"))).alias("cents"))
 
@@ -700,7 +704,10 @@ def kmeans_train_exact(
     assign = None
     for _ in range(iters):
         cents_df = spark.createDataFrame(
-            [(int(ci), [int(x) for x in c]) for ci, c in centroids],
+            pa.table({
+                "ci": pa.array([ci for ci, _ in centroids], pa.int32()),
+                "c": pa.array([c for _, c in centroids], pa.list_(pa.int64())),
+            }),
             "ci int, c array<bigint>",
         ).agg(F.array_sort(F.collect_list(F.struct("ci", "c"))).alias("cents"))
 
